@@ -19,11 +19,10 @@ import graft.functions.ColumnPlugins
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // let-binding codegen rewrite (guide §4): turn the bound() idiom's
-    // interpreted single-element-transform into Catalyst's
-    // With/common-expression form once everything is resolved — runs
-    // in the operator-optimization batch, BEFORE the optimizer's
-    // mandatory RewriteWithExpression hoists the definitions
+    // let-binding codegen rewrite: once everything is resolved, hoist
+    // the bound() idiom's interpreted single-element transform into an
+    // aliased projection below the consuming operator (runs in the
+    // operator-optimization batch; see RewriteBoundLambda)
     ext.injectOptimizerRule(_ => graft.expressions.RewriteBoundLambda)
     ext.injectFunction((
       new FunctionIdentifier("graft_cosine"),

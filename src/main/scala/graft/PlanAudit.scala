@@ -43,7 +43,10 @@ object PlanAudit {
               case e: CodegenFallback => falls.add(e.prettyName)
               case _ => ()
             })
-          } catch { case _: Throwable => () }
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              System.err.println(s"[audit] plan walk failed: $e")
+          }
         override def onSuccess(f: String,
             qe: org.apache.spark.sql.execution.QueryExecution,
             ns: Long): Unit = walk(qe)
@@ -61,9 +64,11 @@ object PlanAudit {
         falls.clear()
         try {
           fn(spark, sfDir).count()
-          // the listener bus delivers asynchronously — let in-flight
-          // events land before reading the set
-          Thread.sleep(300)
+          // the listener bus delivers asynchronously — drain it so every
+          // event of this entry lands before the set is read
+          if (!org.apache.spark.graftbridge.ListenerBridge
+                .drain(spark.sparkContext))
+            System.err.println(s"[audit] $name: listener bus did not drain")
           val fs = new java.util.TreeSet[String](falls)
           println(s"[audit] $name: " +
             (if (fs.isEmpty) "-"

@@ -157,15 +157,6 @@ object Chunker extends Serializable {
     go(chunks)
   }
 
-  /** Full-fidelity G3: char-recursive chunking then token-limit
-    * enforcement.
-    */
-  def chunkWithTokenLimit(text: String, size: Int = 400, overlap: Int = 50,
-                          minLen: Int = 10, maxTokens: Int = 2048,
-                          tokenOverlap: Int = 25): Seq[String] =
-    enforceTokenLimit(chunk(text, size, overlap, minLen),
-      maxTokens, tokenOverlap)
-
   /** DataFrame form via the native [[graft.expressions.ChunkText]]
     * Generator: (idCol, text) → (idCol, chunk_idx, chunk). Plans as a
     * `Generate` node (like explode) — no encoder round-trip.

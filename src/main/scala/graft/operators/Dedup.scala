@@ -1,7 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.expressions.{Md5U32, MinHashSignature}
 
 /** Deduplication family for large-scale corpus curation: exact
   * (hash-groupBy), MinHash+LSH banding, SimHash, n-gram Jaccard.
@@ -35,27 +39,16 @@ object Dedup {
   case object Xx64 extends SigHash
   case object Md5 extends SigHash
 
-  /** Engine-neutral 32-bit hash: first 8 hex chars of md5(s) as a long
-    * in [0, 2³²). DuckDB mirror: `('0x' || substr(md5(s), 1, 8))::BIGINT`.
+  /** Engine-neutral 32-bit hash: the first 4 bytes of md5(s) as a long
+    * in [0, 2³²), from the native MD5 of [[graft.expressions.DocHash]]
+    * (no hex string, no `conv`). DuckDB mirror:
+    * `('0x' || substr(md5(s), 1, 8))::BIGINT`.
     */
   def md5u32(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long")
+    native(Md5U32(expr(c.cast("string"))))
 
-  /** Md5-mode permutation family: universal affine hashes
-    * `(a·h + b) mod MixP` over the md5-derived base hash — ONE md5 per
-    * shingle instead of one per (shingle × seed), which measured 3-4×
-    * faster at sf0.1. Exact in ANSI long arithmetic (a, b < 2²⁹ and
-    * h < 2³² keep the product < 2⁶¹) and in any SQL BIGINT; the oracle
-    * SQL embeds the same constants (generated from this method, so the
-    * two engines can never drift).
-    */
-  val MixP = 4294967291L // largest prime < 2³²
-  def mixConsts(numHashes: Int): IndexedSeq[(Long, Long)] = {
-    val rnd = new scala.util.Random(0x5eed5eedL)
-    (0 until numHashes).map { _ =>
-      (1L + rnd.nextInt((1 << 29) - 1).toLong, rnd.nextInt(1 << 29).toLong)
-    }
-  }
+  private def native(e: Expression): Column = ColumnBridge.column(e)
+  private def expr(c: Column): Expression = ColumnBridge.expression(c)
 
   /** Let-binding for column expressions — see
     * [[graft.functions.Vectors.bound]] (shared definition); re-exported
@@ -80,9 +73,10 @@ object Dedup {
   /** Hashes of word n-shingles, skipping the string materialization:
     * `xxhash64(w1, w2, w3)` hashes the shingle's words directly, so no
     * per-shingle `concat_ws` string is ever allocated and the distinct
-    * runs over longs, not strings. Signature builders (sim/minhash)
-    * only consume shingle HASHES, so this is semantics-preserving for
-    * them (equal shingles hash equal; distinct collisions are 2⁻⁶⁴).
+    * runs over longs, not strings. Signatures only consume shingle
+    * HASHES, so this is semantics-preserving for them (equal
+    * shingles hash equal; distinct collisions are 2⁻⁶⁴); the MinHash
+    * kernel hashes shingles the same way.
     * Exact-Jaccard paths ([[jaccardPairs]], [[jaccardOfSets]]) keep the
     * string form — their postings/intersections are defined on the
     * shingle values themselves.
@@ -104,25 +98,18 @@ object Dedup {
     df.groupBy(TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("copies"))
 
-  /** MinHash signature from a precomputed shingle array: the shingles are
-    * hashed with xxhash64 ONCE (the only pass that touches strings), then
-    * each of the `numHashes` minima re-mixes that one long array through
-    * `xxhash64(h, seed_i)` — a fixed-width 12-byte hash, ~10× cheaper than
-    * re-hashing every shingle string per seed (plain `h·a+b` mixing would
-    * be cheaper still but trips ANSI overflow checks). Empty shingle sets
-    * yield an all-null signature; callers that band must filter those out
-    * first (see [[minhashCandidates]]) or every degenerate doc collides
-    * into a single quadratic bucket.
+  /** MinHash signature of a text column: the `numHashes` minima of its
+    * word 3-shingles' hashes under the seeded permutations of the
+    * `hash` family, computed per row by the native
+    * [[graft.expressions.MinHashSignature]] kernel (one loop per doc:
+    * split, hash each shingle once, fold every permutation's minimum).
+    * Docs with fewer than 3 words have no shingle and get a null
+    * signature; [[bandBuckets]] emits no bucket for them, or every
+    * degenerate doc would collide into a single quadratic bucket.
     */
-  def minhashSignatureOfShingles(sh: Column, numHashes: Int = 32): Column =
-    bound(transform(sh, s => xxhash64(s))) { hv =>
-      array((0 until numHashes).map(seed =>
-        array_min(transform(hv, h => xxhash64(h, lit(seed))))): _*)
-    }
-
-  /** MinHash signature of a text column (shingling inlined). */
-  def minhashSignature(text: Column, numHashes: Int = 32): Column =
-    minhashSignatureOfShingles(shingles(text), numHashes)
+  def minhashSignature(text: Column, numHashes: Int = 32,
+                       hash: SigHash = Xx64): Column =
+    native(MinHashSignature(expr(lower(text)), numHashes, hash == Md5))
 
   /** LSH band keys: signature sliced into `bands` bands, each hashed.
     * Docs sharing any (band index, band hash) are near-dup candidates.
@@ -133,55 +120,26 @@ object Dedup {
   def lshBandKeys(signature: Column, bands: Int, rows: Int,
                   hash: SigHash = Xx64): Column =
     bound(signature) { sg =>
-      array((0 until bands).map { b =>
+      // a null (degenerate) signature has no band keys
+      when(sg.isNotNull, array((0 until bands).map { b =>
         val key = array_join(slice(sg, b * rows + 1, rows), ",")
         struct(lit(b).as("band"),
           (hash match {
             case Xx64 => xxhash64(key)
             case Md5  => key
           }).as("band_hash"))
-      }: _*)
+      }: _*))
     }
 
-  /** Per-doc MinHash signatures as a relation: shingles exploded once
-    * (degenerate zero-shingle docs vanish with the explode — exactly
-    * the docs whose constant signature would otherwise form one
-    * quadratic bucket), hashed relationally, then `numHashes` seeded
-    * minima as codegen'd map-side-combined `min` aggregates. The
-    * whole-table twin of [[minhashSignatureOfShingles]], whose 32
-    * interpreted per-row `transform` passes it beats ~3× at sf0.1 —
-    * the same interpreted-HOF→relational rewrite as
-    * [[simhashSignatures]].
+  /** Per-doc MinHash signatures as a relation `(id, sig)`: one
+    * projection of [[minhashSignature]] — no explode, no shuffle.
+    * Degenerate (zero-shingle) docs keep their row with a null `sig`.
     */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
                         numHashes: Int = 32,
-                        hash: SigHash = Xx64): DataFrame = {
-    val hashed = hash match {
-      case Xx64 =>
-        df.select(col(idCol).as("id"),
-          explode(shingleHashes(col(textCol))).as("h"))
-      case Md5 =>
-        // oracle mode hashes the shingle STRING once (md5u32), then each
-        // permutation re-mixes the ≤10-char decimal rendering — exactly
-        // what the DuckDB mirror computes
-        df.select(col(idCol).as("id"),
-            explode(shingles(col(textCol))).as("sgl"))
-          .select(col("id"), md5u32(col("sgl")).as("h"))
-    }
-    val consts = mixConsts(numHashes)
-    val aggs = (0 until numHashes).map { seed =>
-      val mixed = hash match {
-        case Xx64 => xxhash64(col("h"), lit(seed))
-        case Md5  =>
-          val (a, b) = consts(seed)
-          (col("h") * a + b) % MixP
-      }
-      min(mixed).as(s"m$seed")
-    }
-    hashed.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
+                        hash: SigHash = Xx64): DataFrame =
+    df.select(col(idCol).as("id"),
+      minhashSignature(col(textCol), numHashes, hash).as("sig"))
 
   /** Candidate near-dup pairs via MinHash+LSH banding.
     * Returns (id_a, id_b) with id_a < id_b, distinct.
@@ -190,10 +148,10 @@ object Dedup {
                         numHashes: Int = 32, bands: Int = 8,
                         hash: SigHash = Xx64): DataFrame = {
     val rows = numHashes / bands
-    // materialized once: the signature aggregate (explode + 32 min aggs)
-    // feeds both sides of the bucket self-join, and exchange reuse does
-    // not kick in across the differing aliases — without the checkpoint
-    // the whole signature computation runs twice (measured 2× at sf0.1)
+    // materialized once: the signatures feed both sides of the bucket
+    // self-join, and exchange reuse does not kick in across the
+    // differing aliases — without the checkpoint every doc is hashed
+    // twice
     val sig = Materialize(
       minhashSignatures(df, textCol, idCol, numHashes, hash))
     val buckets = bandBuckets(sig, numHashes, bands, hash)
@@ -244,7 +202,7 @@ object Dedup {
   }
 
   /** Banded LSH bucket rows `(id, band, band_hash)` for a signature
-    * relation — the shuffled currency of every candidate generator
+    * relation (null-signature docs yield no rows) — the shuffled currency of every candidate generator
     * here, and the PERSISTED form of the incremental signature index:
     * storing buckets (not signatures) means later deltas probe the
     * index without re-banding the corpus, and clustering the stored

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.expressions.HashEmbed
 import graft.functions.Vectors
 
 /** Similarity search over embedding columns (`ArrayType(FloatType)`):
@@ -903,80 +905,34 @@ object Similarity {
   }
 
   /** Deterministic feature-hash embedding stand-in for the reference's
-    * sentence-transformer (M3, embedding_utils.py:26-92): tokens hashed
-    * into `dim` signed buckets, L2-normalized. Pure HOF expressions —
-    * computed scan-side, codegen'd, reproducible across engines/runs.
+    * sentence-transformer (M3, embedding_utils.py:26-92): lowercased
+    * whitespace tokens hashed into `dim` signed buckets, L2-normalized
+    * (null when the norm is zero). One native
+    * [[graft.expressions.HashEmbed]] kernel call per row — computed
+    * scan-side, codegen'd, reproducible across engines and runs; the
+    * [[Dedup.Md5]] family is the one DuckDB replays.
     */
-  def hashEmbedding(text: Column, dim: Int = 64): Column = {
-    val tokens = array_remove(split(lower(text), "\\s+"), "")
-    // hash every token ONCE into (bucket, ±1), then one cheap filtered
-    // sum per bucket — O(dim·tokens) integer compares, instead of
-    // rebuilding a dim-wide accumulator array per token
-    val pairs = transform(tokens, tk => struct(
-      pmod(xxhash64(tk), lit(dim)).cast("int").as("idx"),
-      when(pmod(xxhash64(tk, lit(1)), lit(2)) === 0, 1.0).otherwise(-1.0)
-        .as("s")))
-    // bind the hashed pairs once — referenced dim× below, and Catalyst
-    // would otherwise re-hash every token per output dimension
-    val raw = Dedup.bound(pairs) { pv =>
-      array((0 until dim).map { i =>
-        aggregate(filter(pv, p => p.getField("idx") === i),
-          lit(0.0), (acc, p) => acc + p.getField("s"))
-      }: _*)
-    }
-    Vectors.l2Normalize(raw)
-  }
+  def hashEmbedding(text: Column, dim: Int = 64,
+                    hash: Dedup.SigHash = Dedup.Xx64): Column =
+    ColumnBridge.column(HashEmbed(
+      ColumnBridge.expression(lower(text)), dim, hash == Dedup.Md5))
 
-  /** Feature-hash embed + L2-normalize + per-key mean pool, relationally
-    * (the whole-table form of [[hashEmbedding]] + [[vecMean]]): tokens
-    * are exploded and hashed ONCE, then everything is codegen'd
-    * hash-aggregates — (id,idx) signed sums → per-doc norm → per-key
-    * component means densified over key×dim. Zero-norm docs are dropped,
-    * matching `l2Normalize`'s null-on-zero guard. The per-row HOF
-    * composition evaluates interpreted lambdas per token and is an
-    * order of magnitude slower at table scale; this plan is three
-    * map-side-combined shuffles of narrow rows.
+  /** Feature-hash embed + per-key mean pool (the whole-table form of
+    * [[hashEmbedding]] + [[vecMean]]): each doc is embedded ONCE by the
+    * kernel, its dense components posexploded, and one hash-aggregate
+    * on (key, idx) averages them — the only shuffle carries map-side
+    * combined (sum, count) partials. Zero-norm docs (null embedding)
+    * explode to nothing, so they neither contribute nor count.
     * Output: (key, idx, mean_val).
     */
-  def hashEmbedMeanByKey(df: DataFrame, keyCol: String, idCol: String,
-                         textCol: String, dim: Int,
-                         hash: Dedup.SigHash = Dedup.Xx64): DataFrame = {
-    val tokRaw = df.select(col(idCol).as("id"), col(keyCol).as("key"),
-      explode(array_remove(split(lower(col(textCol)), "\\s+"), ""))
-        .as("tk"))
-    val tok = hash match {
-      case Dedup.Xx64 => tokRaw.select(col("id"), col("key"),
-        pmod(xxhash64(col("tk")), lit(dim)).cast("int").as("idx"),
-        when(pmod(xxhash64(col("tk"), lit(1)), lit(2)) === 0, 1.0)
-          .otherwise(-1.0).as("s"))
-      case Dedup.Md5 =>
-        // oracle mode (see Dedup.SigHash): ONE md5 per token; bucket
-        // from the low bits, sign from bit 16 — both replayable in SQL
-        tokRaw.select(col("id"), col("key"),
-            Dedup.md5u32(col("tk")).as("h"))
-          .select(col("id"), col("key"),
-            (col("h") % dim).cast("int").as("idx"),
-            when(shiftright(col("h"), 16) % 2 === 0, 1.0)
-              .otherwise(-1.0).as("s"))
-    }
-    val sparse = tok.groupBy(col("id"), col("key"), col("idx"))
-      .agg(sum(col("s")).as("v"))
-    val norms = sparse.groupBy(col("id"))
-      .agg(sqrt(sum(col("v") * col("v"))).as("norm"))
-      .filter(col("norm") > 0.0)
-    val unit = sparse.join(norms, Seq("id"))
-    val nDocs = unit.select(col("id"), col("key")).distinct()
-      .groupBy(col("key")).agg(count(lit(1)).as("n_docs"))
-    val sums = unit
-      .select(col("key"), col("idx"), (col("v") / col("norm")).as("uv"))
-      .groupBy(col("key"), col("idx")).agg(sum(col("uv")).as("sv"))
-    val dims = df.sparkSession.range(dim)
-      .select(col("id").cast("int").as("idx"))
-    nDocs.crossJoin(broadcast(dims))
-      .join(sums, Seq("key", "idx"), "left")
-      .select(col("key"), col("idx"),
-        (coalesce(col("sv"), lit(0.0)) / col("n_docs")).as("mean_val"))
-  }
+  def hashEmbedMeanByKey(df: DataFrame, keyCol: String, textCol: String,
+                         dim: Int,
+                         hash: Dedup.SigHash = Dedup.Xx64): DataFrame =
+    df.select(col(keyCol).as("key"),
+        posexplode(hashEmbedding(col(textCol), dim, hash))
+          .as(Seq("idx", "uv")))
+      .groupBy(col("key"), col("idx"))
+      .agg((sum(col("uv")) / count(lit(1))).as("mean_val"))
 
   /** A2 mean-pool via the typed [[graft.expressions.VecMeanAgg]]
     * Aggregator: ONE shuffle of (sums[dim], count) partials per group —

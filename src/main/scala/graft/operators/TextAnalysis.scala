@@ -319,10 +319,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(text), "\\s+", " "))
 
-  /** 64-bit rolling-style fingerprint (cheap integer form). */
-  def fingerprint64(text: Column): Column =
-    xxhash64(regexp_replace(lower(text), "\\s+", " "))
-
   /** Built-in Vietnamese compound-word lexicon for [[viSegment]] —
     * common 2-3-syllable lexical words (a small, public list; real
     * deployments pass their full dictionary). G3's `ViTokenizer` step

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.DocHash
 import graft.functions.{ColumnPlugins, Text, Vectors}
 import graft.operators._
 
@@ -123,11 +124,11 @@ private[queries] trait QueriesDedup { this: Queries.type =>
     */
   private[queries] def minhashBandCtes(numHashes: Int, bands: Int): String = {
     val rows = numHashes / bands
-    // constants shared with the Spark side via Dedup.mixConsts — the
+    // constants shared with the Spark side via DocHash.mixConsts — the
     // two engines compute the same (a·h + b) mod P minima by
     // construction
-    val mins = Dedup.mixConsts(numHashes).zipWithIndex.map {
-      case ((a, b), i) => s"min((h * $a + $b) % ${Dedup.MixP}) AS m$i"
+    val mins = DocHash.mixConsts(numHashes).zipWithIndex.map {
+      case ((a, b), i) => s"min((h * $a + $b) % ${DocHash.MixP}) AS m$i"
     }.mkString(",\n  ")
     val bandSel = (0 until bands).map { b =>
       val key = (b * rows until (b + 1) * rows).map(i => s"m$i::VARCHAR")
@@ -495,7 +496,7 @@ private[queries] trait QueriesDedup { this: Queries.type =>
   private[queries] lazy val q122Boiler = "subscribe to our newsletter for the " +
     "latest updates and exclusive offers today"
   private[queries] lazy val q122Sql = {
-    // md5u32 mirror (Dedup.scala:39): first 8 hex chars of md5 as BIGINT
+    // Dedup.md5u32 mirror: first 8 hex chars of md5 as BIGINT
     val gram = (1 to 6).map(j => s"tk[p+$j]").mkString(" || ' ' || ")
     s"""WITH corpus AS (
       | SELECT doc_id,

@@ -88,7 +88,7 @@ private[queries] trait QueriesVector { this: Queries.type =>
   private[queries] def q28(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Similarity.hashEmbedMeanByKey(t(s, dir, "documents"),
-        "lang", "doc_id", "text", 16, hash = Dedup.Md5)
+        "lang", "text", 16, hash = Dedup.Md5)
       .select($"key".as("lang"), $"idx".cast("long").as("idx"),
         (floor($"mean_val" * 100000.0 + 0.5) / 100000.0).as("mean_val"))
       .orderBy($"lang", $"idx")

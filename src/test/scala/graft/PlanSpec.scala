@@ -48,17 +48,22 @@ class PlanSpec extends AnyFunSuite {
       s"expected pruned ReadSchema in:\n$p")
   }
 
-  test("minhash signatures aggregate relationally — no interpreted " +
+  test("minhash signatures are one native projection — no interpreted " +
       "per-row seed loop") {
-    val p = graft.operators.Dedup
+    val plan = graft.operators.Dedup
       .minhashSignatures(spark.read.parquet(s"$sf/documents.parquet"),
         "text", "doc_id")
-      .queryExecution.executedPlan.toString
-    // the 32 seeded minima must be HashAggregate min()s (codegen,
-    // map-side combined), not a per-row transform over the signature
-    assert(p.contains("partial_min") || p.contains("min("),
-      s"expected min aggregates in:\n$p")
-    assert(!p.toLowerCase.contains("cartesian"))
+      .queryExecution.executedPlan
+    val p = plan.toString
+    // every doc is hashed by the codegen'd kernel inside the scan's
+    // stage: no per-row transform, no shingle explode, no aggregate
+    val compiled = plan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+    }.exists(_.child.expressions.exists(_.exists(
+      _.isInstanceOf[graft.expressions.MinHashSignature])))
+    assert(compiled, s"expected graft_minhash under whole-stage codegen in:\n$p")
+    Seq("Generate", "Exchange", "transform(", "HashAggregate").foreach(op =>
+      assert(!p.contains(op), s"unexpected $op in:\n$p"))
   }
 
   test("q62 tf-idf computes the term explode exactly once") {

@@ -47,11 +47,22 @@ class ScaleSpec extends AnyFunSuite {
         Dedup.minhashCandidates(mkDocs(rep), "text", "doc_id").count()
         (tally.snapshot(spark.sparkContext) - s0).write
       }
-      val small = shuffled(1)
-      val large = shuffled(4)
-      assert(small > 0, "expected the signature aggregation to shuffle")
-      // map-side combine ships per-(partition, doc) signature partials:
-      // constant in text length; only the banding keys ride behind it
+      // signatures are computed map-side (no shuffle); the band-key
+      // self-join is the operator's shuffle at corpus scale, so forbid
+      // the broadcast this 200-doc fixture would otherwise get
+      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      val old = keys.map(k => k -> spark.conf.getOption(k))
+      keys.foreach(spark.conf.set(_, "-1"))
+      val (small, large) =
+        try (shuffled(1), shuffled(4))
+        finally old.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      assert(small > 0, "expected the band-key self-join to shuffle")
+      // the join ships (id, band, band_hash) rows: fixed-width hashes of
+      // the signature, constant in text length
       assert(large < small * 2,
         s"shuffle bytes scaled with text size: $small -> $large")
     } finally spark.sparkContext.removeSparkListener(tally)

@@ -114,7 +114,7 @@ class VectorSimilaritySpec extends AnyFunSuite {
         BigDecimal(r.getDouble(2)).setScale(9, BigDecimal.RoundingMode.HALF_UP)))
       .toSet
     val relational = Similarity.hashEmbedMeanByKey(
-        docs, "lang", "doc_id", "text", 8)
+        docs, "lang", "text", 8)
       .collect().map(r => (r.getString(0), r.getInt(1),
         BigDecimal(r.getDouble(2)).setScale(9, BigDecimal.RoundingMode.HALF_UP)))
       .toSet
