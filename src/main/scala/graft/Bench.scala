@@ -1,28 +1,9 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 object Bench {
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // warm the scan/codegen/shuffle stack on the tiny sf so per-query
     // numbers measure steady-state execution, not JVM startup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -37,58 +18,30 @@ object Bench {
     } catch { case _: Throwable => () }
     // GRAFT_BENCH_SELFTEST=1 injects a deliberately broken query to
     // prove failures surface as explicit markers, not fake timings
-    val selftest: Seq[(String, (SparkSession, String) => DataFrame)] =
+    val selftest: Seq[(String, Harness.Entry)] =
       if (sys.env.contains("GRAFT_BENCH_SELFTEST"))
         Seq("zz_selftest_broken" ->
           ((s: SparkSession, _: String) => s.read.parquet("/nonexistent")))
+          .filter(p => Harness.selected(p._1))
       else Nil
-    // SPARK_GRAFT_ONLY=q26,q48 restricts the run to queries whose name
-    // starts with any of the comma-separated prefixes (dev loop tool;
-    // the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
     // per-query shuffle read/write/spill deltas — the measured side of
     // SCALE.md's shuffle-bytes claims (a plan can look right and still
     // shuffle 10× what it should; this makes that visible per round)
     val tally = ShuffleTally.install(spark.sparkContext)
-    // per-micro-batch wall times: each completed trigger's
-    // triggerExecution lands in BenchProbe under the active entry, so
-    // a divergent streaming scalar (r16/r18: q180 inflated 13.8× on
-    // the driver host) decomposes into WHICH batch ate the time
-    // instead of forcing another host-noise debate
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryProgressEvent): Unit = {
-          val p = e.progress
-          val ms = Option(p.durationMs.get("triggerExecution"))
-            .map(_.doubleValue).getOrElse(0.0)
-          BenchProbe.record(s"batch${p.batchId}", ms / 1000.0)
-        }
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryTerminatedEvent): Unit = ()
-      })
-    // q180 runs real micro-batches but stays OUT of streamingQueries
-    // (the floor subtotal's membership is a round-over-round contract);
-    // it still needs the listener settle + state-store unload
-    val usesMicroBatches: Set[String] =
-      graft.queries.Queries.streamingQueries + "q180_stream_frontier"
+    // per-micro-batch wall times land in BenchProbe under the active
+    // entry, so an inflated streaming scalar (q180 once read 13.8×)
+    // shows which batch ate the time
+    BenchProbe.recordMicroBatches(spark)
     // the min-of-2 family: every micro-batch entry (scheduler-latency-
-    // dominated, the noisiest on a contended host) plus the two
+    // dominated, the noisiest on a contended host; q180 runs real
+    // micro-batches but stays OUT of streamingQueries, whose floor
+    // subtotal membership is a round-over-round contract) plus the two
     // iterative entries the r18 driver run inflated with them
-    val minOf2: Set[String] =
-      usesMicroBatches ++ Set("q179_quality_lr", "q186_weighted_linkrank")
+    val minOf2: Set[String] = graft.queries.Queries.streamingQueries ++
+      Set("q180_stream_frontier", "q179_quality_lr", "q186_weighted_linkrank")
     // one timed execution of one entry: wall seconds + shuffle-delta
     // JSON + drained probe records (iteration / micro-batch phases)
-    def runOnce(name: String,
-                fn: (SparkSession, String) => DataFrame):
+    def runOnce(name: String, fn: Harness.Entry):
         Either[String, (Double, String, Seq[(String, Double)])] = {
       val s0 = tally.snapshot(spark.sparkContext)
       BenchProbe.start(name)
@@ -107,32 +60,15 @@ object Bench {
             .take(1).mkString.take(160)
           Left(s"err: ${e.getClass.getSimpleName}: $msg")
       }
-      // listener-bus delivery is async: give in-flight progress
-      // events a moment to land before draining, streaming only
-      if (usesMicroBatches(name)) Thread.sleep(300)
+      // listener-bus delivery is async: drain it (the failure path
+      // included) so every progress event of this entry has landed
+      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
       BenchProbe.stop()
       val probes = BenchProbe.drain()
         .collect { case (e, l, s) if e == name => (l, s) }
-      // post-consume hygiene, in all paths: drop stranded iterCut
-      // frames, delete the entry's temp dirs (persisted indexes,
-      // checkpoints, state stores), and unload cached state-store
-      // providers — so no entry rides as block-manager/disk/state
-      // pressure into later entries (the r18 1.4-1.7× drift suspect)
-      try graft.operators.Materialize.releaseAll(spark)
-      catch { case _: Throwable => () }
-      try TempDirs.cleanAll() catch { case _: Throwable => () }
-      if (usesMicroBatches(name)) {
-        // StateStore.unloadAll() drops the provider cache (loaded
-        // HDFSBackedStateStoreProvider maps stay keyed per checkpoint
-        // otherwise — dead weight once the checkpoint dir is deleted).
-        // private[sql], so reached reflectively; best-effort.
-        try {
-          val cls = Class.forName(
-            "org.apache.spark.sql.execution.streaming.state.StateStore$")
-          val mod = cls.getField("MODULE$").get(null)
-          cls.getMethod("unloadAll").invoke(mod)
-        } catch { case _: Throwable => () }
-      }
+      // post-consume hygiene, in all paths (the r18 1.4-1.7× drift
+      // suspect was one entry's leftovers pressuring later entries)
+      Harness.afterEntry(spark)
       out.map { case (sec, sh) => (sec, sh, probes) }
     }
     // streaming entries run min-of-2 IN the harness: their scalar is
@@ -143,33 +79,27 @@ object Bench {
     // (builder dev loop; the driver default keeps non-streaming at 1).
     val baseReps = sys.env.get("SPARK_GRAFT_BENCH_REPEAT")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-    // run in name order so residual warmup always lands on q01 and
-    // per-query numbers stay comparable across rounds
     val results: Seq[(String, Either[String, (Double, String)],
                       Seq[(Double, Seq[(String, Double)])])] =
-      (SparkEntry.queries.toSeq ++ SparkEntry.benchOnly.toSeq ++ selftest)
-        .sortBy(_._1)
-        .filter(p => selected(p._1)).map {
+      (Harness.entries ++ selftest).map {
         case (name, fn) =>
           val reps = if (minOf2(name)) baseReps.max(2) else baseReps
           val runs = (0 until reps).map(_ => runOnce(name, fn))
-          val oks = runs.zipWithIndex.collect {
-            case (Right(r), i) => (r, i)
-          }
+          val oks = runs.collect { case Right(r) => r }
           if (oks.isEmpty) {
             val Left(err) = runs.head: @unchecked
             (name, Left(err), Nil)
           } else {
-            val ((sec, sh, _), _) = oks.minBy(_._1._1)
+            val (sec, sh, _) = oks.minBy(_._1)
             // keep EVERY successful run's scalar + probe detail —
             // min-of-n must stay auditable, not silently pick a number
-            val detail = oks.map { case ((s, _, p), _) => (s, p) }
+            val detail = oks.map { case (s, _, p) => (s, p) }
             (name, Right((sec, sh)), detail)
           }
       }
     val qs = results.map {
       case (k, Right((sec, _)), _) => s"\"" + k + "\":" + sec
-      case (k, Left(err), _) => s"\"" + k + "\":\"" + jsonEscape(err) + "\""
+      case (k, Left(err), _) => s"\"" + k + "\":" + Harness.json(err)
     }.mkString("{", ",", "}")
     val sh = results.collect {
       case (k, Right((_, j)), _) => s"\"" + k + "\":" + j
@@ -177,8 +107,7 @@ object Bench {
     // per-entry decomposition for every entry that has one: each
     // successful run's scalar plus its per-iteration / per-micro-batch
     // phases, e.g. {"runs":[{"sec":6.1,"batch0":2.0,"batch1":1.4}, ...]}
-    def f3p(d: Double): String =
-      "%.3f".formatLocal(java.util.Locale.ROOT, d)
+    def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     val probe = results.collect {
       case (k, Right(_), detail)
           if detail.exists(_._2.nonEmpty) || detail.size > 1 =>
@@ -187,10 +116,10 @@ object Bench {
           // (q149x: 9 pageRank calls → 9 "pr_iter0"s); suffix repeats
           // so the JSON object keys stay unique and lossless
           val seen = scala.collection.mutable.Map.empty[String, Int]
-          (s"\"sec\":${f3p(sec)}" +: ps.map { case (l, s) =>
+          (s"\"sec\":${f3(sec)}" +: ps.map { case (l, s) =>
             val n = seen.getOrElse(l, 0); seen(l) = n + 1
             val lab = if (n == 0) l else s"$l#$n"
-            s"\"${jsonEscape(lab)}\":${f3p(s)}"
+            s"${Harness.json(lab)}:${f3(s)}"
           }).mkString("{", ",", "}")
         }.mkString("[", ",", "]")
         s"\"" + k + "\":{\"runs\":" + runs + "}"
@@ -205,7 +134,6 @@ object Bench {
         if graft.queries.Queries.streamingQueries(k) => sec
     }.sum
     val errs = results.count(_._2.isLeft)
-    def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     // The driver captures only the LAST 2000 chars of this program's
     // output (BENCH_r01..r09 all have parsed:null because the full
     // per-query line is ~4 KB and its head — with the "metric" key —
@@ -223,8 +151,8 @@ object Bench {
     // n_queries + the active restriction (if any) make a
     // SPARK_GRAFT_ONLY dev run self-describing — a 5-query subset can
     // never be mistaken for a full-suite result
-    val restricted = only.map(p =>
-      s""","only":"${jsonEscape(p.mkString(","))}"""").getOrElse("")
+    val restricted = Harness.only.map(p =>
+      s""","only":${Harness.json(p.mkString(","))}""").getOrElse("")
     val fullLine =
       s"""{"metric":"total","unit":"sec","err_count":$errs,"n_queries":${results.size}$restricted,"sf":"$sfDir","streaming_floor_sec":$streamFloor,"nonstreaming_sec":${total - streamFloor},"queries":$qs,"shuffle_bytes":$sh,"probe":$probe,"value":$total}"""
     // resolve against an explicit root (or the CWD, made absolute so
@@ -239,7 +167,7 @@ object Bench {
       System.err.println(
         s"warn: bench_full.json write failed at $fullPath: $e") }
     val errEntries = results.collect {
-      case (k, Left(err), _) => s"\"" + k + "\":\"" + jsonEscape(err) + "\""
+      case (k, Left(err), _) => s"\"" + k + "\":" + Harness.json(err)
     }
     val slowFirst = results.collect {
       case (k, Right((sec, _)), _) => (k, sec)

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{
+  QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+
 /** Per-phase wall-time probe for the bench harness.
   *
   * A full-suite bench number for a streaming or iterative entry is one
@@ -8,7 +13,7 @@ package graft
   * code change), the scalar cannot show WHERE the time went and every
   * divergence becomes a debate. The probe makes the decomposition a
   * first-class bench output: iterative operators wrap each round in
-  * [[time]], the streaming listener records each micro-batch's
+  * [[time]], [[recordMicroBatches]] records each micro-batch's
   * triggerExecution, and Bench emits them per entry on the
   * `probe_times` detail line (the `shuffle_bytes`-line pattern).
   *
@@ -49,6 +54,23 @@ object BenchProbe {
     }
   }
 
+  /** Record every completed micro-batch of `spark`'s streaming queries
+    * as `batch<id>` → its triggerExecution seconds, under the active
+    * entry — so a divergent streaming scalar decomposes into WHICH
+    * batch ate the time. Events arrive on the listener-bus thread;
+    * drain the bus (`ListenerBridge.drain`) before [[drain]]ing here.
+    */
+  def recordMicroBatches(spark: SparkSession): Unit =
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val ms = Option(e.progress.durationMs.get("triggerExecution"))
+          .map(_.doubleValue).getOrElse(0.0)
+        record(s"batch${e.progress.batchId}", ms / 1000.0)
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    })
+
   /** Remove and return everything recorded since the last drain, in
     * arrival order, as (entry, label, seconds).
     */
@@ -69,8 +91,8 @@ object BenchProbe {
   * as disk + state-store pressure and were a prime suspect in the
   * round-18 builder-side 1.4-1.7× drift on the iterative/index family.
   * Entries route creation through [[create]] so the harnesses
-  * (Bench/Verify) can delete everything an entry left behind right
-  * after consuming its result — the filesystem analog of
+  * (`Harness.afterEntry`) can delete everything an entry left behind
+  * right after consuming its result — the filesystem analog of
   * `Materialize.releaseAll`.
   *
   * Library/test callers that never call [[cleanAll]] keep the exact

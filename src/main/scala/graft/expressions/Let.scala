@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.IntegerType
 /** Rewrite the engine's let-binding idiom so bound kernel bodies keep
   * whole-stage codegen (guide §4 / task rule 4).
   *
-  * `Vectors.bound` / `Dedup.bound` pin a value that is referenced more
-  * than once as `element_at(transform(array(value), body), 1)` — the
-  * one PRE-ANALYSIS construct that can carry a let (Catalyst inlines
+  * `Vectors.bound` pins a value that is referenced more than once as
+  * `element_at(transform(array(value), body), 1)` — the one
+  * PRE-ANALYSIS construct that can carry a let (Catalyst inlines
   * projected subexpressions into every use site, and a `With` cannot
   * be built before resolution because `CommonExpressionRef` snapshots
   * the definition's dataType). The cost was that `ArrayTransform` is

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Vectors.bound
+
 /** Training-data curation operators beyond the reference's surface:
   * the selection/packing steps a large-scale pretraining pipeline runs
   * after dedup and quality scoring. All relational — the per-doc
@@ -14,9 +16,6 @@ import org.apache.spark.sql.functions._
   * rules: Rae et al. 2021, arXiv:2112.11446 §A.1.1.)
   */
 object Curation {
-
-  private def bound(value: Column)(body: Column => Column): Column =
-    graft.functions.Vectors.bound(value)(body)
 
   /** Non-empty whitespace tokens of `text`, as an array column. */
   private def wordArr(text: Column): Column =

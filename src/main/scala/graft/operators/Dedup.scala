@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.expressions.{Md5U32, MinHashSignature}
+import graft.functions.Vectors.bound
 
 /** Deduplication family for large-scale corpus curation: exact
   * (hash-groupBy), MinHash+LSH banding, SimHash, n-gram Jaccard.
@@ -49,13 +50,6 @@ object Dedup {
 
   private def native(e: Expression): Column = ColumnBridge.column(e)
   private def expr(c: Column): Expression = ColumnBridge.expression(c)
-
-  /** Let-binding for column expressions — see
-    * [[graft.functions.Vectors.bound]] (shared definition); re-exported
-    * here because every dedup kernel needs it.
-    */
-  private[operators] def bound(value: Column)(body: Column => Column): Column =
-    graft.functions.Vectors.bound(value)(body)
 
   /** Word 3-shingles (distinct), lowercased. The word array is bound
     * once; without the binding the split+filter re-runs for every
@@ -422,30 +416,11 @@ object Dedup {
     df.join(losers, df(idCol) === losers("id"), "left_anti")
   }
 
-  /** SimHash-64: sign-aggregated bit votes of shingle hashes.
-    * Near-dups have small hamming distance; at scale, split into 4
-    * 16-bit bands and exact-match any band (hamming ≤ 3 guarantee).
-    */
-  def simhash(text: Column): Column =
-    // bind the hashed-shingle array: it is referenced 65× below (64
-    // bit-aggregates + size) and would otherwise re-shingle per bit
-    bound(transform(shingles(text), s => xxhash64(s))) { hv =>
-      // bit j of the result = majority vote of bit j across hashes.
-      // ones_j > n/2  ⟺  votes_j = 2·ones_j − n > 0 (the classic ±1 sum)
-      val n = size(hv)
-      (0 until 64).map { j =>
-        val ones = aggregate(hv, lit(0L),
-          (acc, h) => acc + shiftright(h, j).bitwiseAND(1L))
-        when(ones * 2 > n, shiftleft(lit(1L), j)).otherwise(lit(0L))
-      }.reduce((a, b) => a.bitwiseOR(b))
-    }
-
   /** SimHash signatures for a whole table, relationally: explode each
     * doc's shingle hashes (hashed ONCE), then a single hash-aggregate
     * with 64 codegen'd long sums — one shuffle of (id, 64 longs)
-    * partials with map-side combine. This is the scale path: the
-    * per-row HOF [[simhash]] evaluates 64 interpreted lambda passes per
-    * doc, which profiling shows is ~30× slower than this plan at sf0.01.
+    * partials with map-side combine. (A per-row HOF formulation, 64
+    * interpreted lambda passes per doc, profiled ~30× slower at sf0.01.)
     * Output: (id, sig). Docs with zero shingles are dropped (no
     * similarity signal — same rationale as [[minhashCandidates]]).
     */

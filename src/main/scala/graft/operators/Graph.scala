@@ -414,6 +414,11 @@ object Graph {
     * without degrees' second scan+dedup of the edge relation. Returns
     * `(node, rank, out_deg, in_deg)`; values are exactly
     * `pageRank(...).join(degrees(...), "node")`.
+    *
+    * The returned plan reads the checkpointed edge frame, the node
+    * universe and the final ranks, so all three stay persisted after
+    * the call; free them with `Materialize.releaseAll` once the result
+    * has been consumed.
     */
   def pageRankWithDegrees(edges: DataFrame, nodes: DataFrame,
                           srcCol: String, dstCol: String,

@@ -1,6 +1,10 @@
 package graft.operators
 
+import java.lang.ref.WeakReference
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Compute-once materialization of a shared intermediate.
@@ -39,8 +43,8 @@ object Materialize {
   // checkpointed frames of eviction pressure. The registry makes the
   // frames releasable deterministically: operators release their own
   // intermediates per round via [[release]], and harnesses
-  // (Bench/Verify, or a spec) drop the FINAL returned frames after
-  // consuming them via [[releaseAll]].
+  // (`graft.Harness.afterEntry`, or a spec) drop the FINAL returned
+  // frames after consuming them via [[releaseAll]].
   //
   // WEAK references: a library caller of Graph.pageRank/hits/
   // labelPropagation who never calls releaseAll must not have the
@@ -48,12 +52,31 @@ object Materialize {
   // the frame, GC clears the ref and the ContextCleaner reclaims the
   // blocks through the normal RDD-GC path (the pre-registry
   // behavior). Cleared refs are swept on every registry touch.
-  private val tracked = scala.collection.mutable.ListBuffer
-    .empty[java.lang.ref.WeakReference[DataFrame]]
+  //
+  // Each entry also keeps the ids of the frame's checkpoint RDDs: a
+  // result built ON a frame (hits returns hub.join(auth)) pins those
+  // blocks through its own plan after GC has cleared the frame
+  // object, so releaseAll frees them by id. Ids pin nothing, and the
+  // context's persistent-RDD map holds its RDDs weakly.
+  private final class Cut(df: DataFrame) {
+    val frame = new WeakReference(df)
+    val sc = new WeakReference(df.sparkSession.sparkContext)
+    private val rddIds = checkpointRdds(df).map(_.id)
+    def persisted: Seq[RDD[_]] = Option(sc.get).toSeq.flatMap { c =>
+      val live = c.getPersistentRDDs
+      rddIds.flatMap(live.get)
+    }
+    def live: Boolean = frame.get != null || persisted.nonEmpty
+  }
 
-  private def sweepLocked(): Unit = tracked.filterInPlace(_.get != null)
+  private val tracked = scala.collection.mutable.ListBuffer.empty[Cut]
 
-  /** Live (non-GC-cleared) tracked-frame count — test hook. */
+  private def sweepLocked(): Unit = tracked.filterInPlace(_.live)
+
+  private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+
+  /** Tracked entries whose frame or blocks are still live — test hook. */
   private[graft] def trackedCount: Int =
     synchronized { sweepLocked(); tracked.size }
 
@@ -75,33 +98,32 @@ object Materialize {
     * frame's consumers are done. Idempotent.
     */
   def release(df: DataFrame): Unit = {
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    checkpointRdds(df).foreach(_.unpersist(blocking = false))
     df.unpersist()
     synchronized {
-      tracked.filterInPlace { r =>
-        val d = r.get; d != null && (d ne df)
-      }
+      tracked.filterInPlace(c => (c.frame.get ne df) && c.live)
     }
   }
 
   /** Release every still-tracked [[iterCut]] frame of `spark`'s
-    * context — the post-consume hook Bench/Verify call after each
-    * query so one query's final iterative frames never ride as
+    * context — the post-consume hook `Harness.afterEntry` runs after
+    * each entry so one entry's final iterative frames never ride as
     * eviction pressure into the next (assertable:
-    * `sparkContext.getPersistentRDDs` returns to its pre-query size).
+    * `sparkContext.getPersistentRDDs` returns to its pre-query size),
+    * also when GC has already cleared a frame whose blocks a returned
+    * plan still pins.
     */
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     val mine = synchronized {
       sweepLocked()
-      tracked.iterator.flatMap(r => Option(r.get))
-        .filter(_.sparkSession.sparkContext eq spark.sparkContext)
-        .toList
+      val (m, rest) = tracked.partition(_.sc.get eq spark.sparkContext)
+      tracked.clear(); tracked ++= rest
+      m
     }
-    mine.foreach(release)
+    mine.foreach { c =>
+      c.persisted.foreach(_.unpersist(blocking = false))
+      Option(c.frame.get).foreach(_.unpersist())
+    }
   }
 
   /** EAGER lineage cut for iterative loops (PageRank, label
@@ -134,7 +156,7 @@ object Materialize {
       }
     synchronized {
       sweepLocked()
-      tracked += new java.lang.ref.WeakReference(out)
+      tracked += new Cut(out)
     }
     out
   }

@@ -783,23 +783,18 @@ object Similarity {
     * Output: (c_id, words array<long>).
     */
   def bqEncode(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val v = Vectors.toDouble(col(vecCol))
-    df.select(col(idCol).as("c_id"), v.as("__v"))
-      .select(col("c_id"), col("__v"),
-        (aggregate(col("__v"), lit(0.0), (acc, x) => acc + x) /
-          size(col("__v"))).as("__mu"))
+    val (vv, mu) = (col("__v"), col("__mu"))
+    df.select(col(idCol).as("c_id"), Vectors.toDouble(col(vecCol)).as("__v"))
+      .select(col("c_id"), vv,
+        (aggregate(vv, lit(0.0), (acc, x) => acc + x) / size(vv)).as("__mu"))
       .select(col("c_id"),
-        Vectors.bound(col("__v")) { vv =>
-          Vectors.bound(col("__mu")) { mu =>
-            transform(
-              sequence(lit(0), floor((size(vv) - 1) / 63).cast("int")),
-              w => aggregate(sequence(lit(0), lit(62)), lit(0L),
-                (acc, j) => acc * 2 +
-                  when(w * 63 + j < size(vv) &&
-                    element_at(vv, w * 63 + j + 1) > mu, 1L)
-                    .otherwise(0L)))
-          }
-        }.as("words"))
+        transform(
+          sequence(lit(0), floor((size(vv) - 1) / 63).cast("int")),
+          w => aggregate(sequence(lit(0), lit(62)), lit(0L),
+            (acc, j) => acc * 2 +
+              when(w * 63 + j < size(vv) &&
+                element_at(vv, w * 63 + j + 1) > mu, 1L)
+                .otherwise(0L))).as("words"))
   }
 
   /** Approximate top-k over a BQ corpus: hamming-rank the packed

@@ -118,11 +118,14 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical texts equal, near-dups within small hamming") {
-    val df = Seq((docA, docA), (docA, docANear), (docA, docB)).toDF("a", "b")
-      .select(Dedup.hamming(Dedup.simhash($"a"), Dedup.simhash($"b")).as("h"))
-    val out = df.collect().map(_.getLong(0))
-    assert(out(0) == 0L)
-    assert(out(1) < out(2)) // near-dup closer than unrelated
+    val sigs = Dedup.simhashSignatures(
+      Seq((1L, docA), (2L, docA), (3L, docANear), (4L, docB))
+        .toDF("id", "text"), "text", "id")
+    val out = sigs.as("a").join(sigs.as("b"), $"a.id" === 1L && $"b.id" =!= 1L)
+      .select($"b.id", Dedup.hamming($"a.sig", $"b.sig"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out(2L) == 0L)
+    assert(out(3L) < out(4L)) // near-dup closer than unrelated
   }
 
   test("simhashCandidates finds exact copies") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Materialize
+import graft.operators.{Graph, Materialize}
 
 /** The iterCut frame registry's lifecycle contract: deterministic
   * release for harness callers (releaseAll), and WEAK tracking so a
@@ -94,5 +94,31 @@ class MaterializeSpec extends AnyFunSuite {
     Materialize.releaseAll(spark)
     assert(spark.sparkContext.getPersistentRDDs.size == pre)
     assert(Materialize.trackedCount == 0)
+  }
+
+  test("releaseAll frees the cut frames under a graph result after GC " +
+    "cleared the frame objects — the result's plan still pins them") {
+    import spark.implicits._
+    Materialize.releaseAll(spark)
+    // id sets, not sizes: the GC below also drops RDDs earlier tests
+    // left unreachable
+    val pre = spark.sparkContext.getPersistentRDDs.keySet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- pre
+    // hits returns hub.join(auth): its last cut frames are reachable
+    // only through the returned plan, never as frame objects
+    val h = Graph.hits(Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst"),
+      (0L to 2L).toDF("node"), "src", "dst", iterations = 2)
+    assert(h.count() == 3)
+    val canary = new java.lang.ref.WeakReference(new Object)
+    var tries = 0
+    while (canary.get != null && tries < 100) {
+      System.gc(); Thread.sleep(20); tries += 1
+    }
+    assert(canary.get == null, "no GC ran")
+    assert(added.nonEmpty)
+    Materialize.releaseAll(spark)
+    assert(added.isEmpty)
+    assert(Materialize.trackedCount == 0)
+    assert(h.columns.toSeq == Seq("node", "hub", "authority"))
   }
 }

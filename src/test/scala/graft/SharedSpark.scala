@@ -7,19 +7,10 @@ import org.apache.spark.sql.SparkSession
   */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // events.parquet carries INT64 TIMESTAMP(NANOS) — same setting
-      // Verify/Bench use; Queries.t converts to µs timestamps
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
+    val s = Harness.session(4,
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
