@@ -24,14 +24,6 @@ object Bench {
           ((s: SparkSession, _: String) => s.read.parquet("/nonexistent")))
           .filter(p => Harness.selected(p._1))
       else Nil
-    // per-query shuffle read/write/spill deltas — the measured side of
-    // SCALE.md's shuffle-bytes claims (a plan can look right and still
-    // shuffle 10× what it should; this makes that visible per round)
-    val tally = ShuffleTally.install(spark.sparkContext)
-    // per-micro-batch wall times land in BenchProbe under the active
-    // entry, so an inflated streaming scalar (q180 once read 13.8×)
-    // shows which batch ate the time
-    BenchProbe.recordMicroBatches(spark)
     // the min-of-2 family: every micro-batch entry (scheduler-latency-
     // dominated, the noisiest on a contended host; q180 runs real
     // micro-batches but stays OUT of streamingQueries, whose floor
@@ -39,37 +31,27 @@ object Bench {
     // iterative entries the r18 driver run inflated with them
     val minOf2: Set[String] = graft.queries.Queries.streamingQueries ++
       Set("q180_stream_frontier", "q179_quality_lr", "q186_weighted_linkrank")
-    // one timed execution of one entry: wall seconds + shuffle-delta
-    // JSON + drained probe records (iteration / micro-batch phases)
+    // one timed execution of one entry: wall seconds of
+    // `fn(spark, sfDir).count()`, its shuffle-delta JSON and its
+    // iteration / micro-batch phases (an inflated streaming scalar —
+    // q180 once read 13.8× — shows which batch ate the time)
     def runOnce(name: String, fn: Harness.Entry):
         Either[String, (Double, String, Seq[(String, Double)])] = {
-      val s0 = tally.snapshot(spark.sparkContext)
-      BenchProbe.start(name)
-      val t0 = System.nanoTime()
-      // a failing query must NOT report a success-looking wall-time:
-      // it becomes an explicit "err:" marker and an err_count bump
-      val out = try {
-        fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val d = tally.snapshot(spark.sparkContext) - s0
-        Right((sec,
-          s"""{"w":${d.write},"r":${d.read},"sp":${d.spilled}}"""))
-      } catch {
-        case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse("").linesIterator
-            .take(1).mkString.take(160)
-          Left(s"err: ${e.getClass.getSimpleName}: $msg")
-      }
-      // listener-bus delivery is async: drain it (the failure path
-      // included) so every progress event of this entry has landed
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      BenchProbe.stop()
-      val probes = BenchProbe.drain()
-        .collect { case (e, l, s) if e == name => (l, s) }
+      val (out, rec) = Observe.entry(spark, name)(fn(spark, sfDir).count())
       // post-consume hygiene, in all paths (the r18 1.4-1.7× drift
       // suspect was one entry's leftovers pressuring later entries)
       Harness.afterEntry(spark)
-      out.map { case (sec, sh) => (sec, sh, probes) }
+      // a failing query must NOT report a success-looking wall-time:
+      // it becomes an explicit "err:" marker and an err_count bump
+      out.left.map { e =>
+        val msg = Option(e.getMessage).getOrElse("").linesIterator
+          .take(1).mkString.take(160)
+        s"err: ${e.getClass.getSimpleName}: $msg"
+      }.map { _ =>
+        val d = rec.shuffle
+        (rec.sec, s"""{"w":${d.write},"r":${d.read},"sp":${d.spilled}}""",
+          rec.phases)
+      }
     }
     // streaming entries run min-of-2 IN the harness: their scalar is
     // scheduler-latency-dominated (~3-5 s floor × micro-batch count),

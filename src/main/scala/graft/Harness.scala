@@ -89,3 +89,49 @@ object Harness {
     case c => c.toString
   } + "\""
 }
+
+/** Registry of bench/verify-scoped temp directories.
+  *
+  * Query entries that persist an index or drive a streaming source do
+  * it under `Files.createTempDirectory` — across a 220-entry bench run
+  * those dirs (parquet indexes, state stores, checkpoints) accumulate
+  * as disk + state-store pressure and were a prime suspect in the
+  * round-18 builder-side 1.4-1.7× drift on the iterative/index family.
+  * Entries route creation through [[create]] so the harnesses
+  * (`Harness.afterEntry`) can delete everything an entry left behind
+  * right after consuming its result — the filesystem analog of
+  * `Materialize.releaseAll`.
+  *
+  * Library/test callers that never call [[cleanAll]] keep the exact
+  * old behavior (OS-temp dirs, cleaned by the OS), at the cost of one
+  * queued Path each.
+  */
+object TempDirs {
+  private val dirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** `Files.createTempDirectory(prefix)`, registered for [[cleanAll]]. */
+  def create(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    dirs.add(p)
+    p.toString
+  }
+
+  /** Recursively delete every directory created since the last clean.
+    * Call only after the creating entry's result has been fully
+    * consumed (a returned DataFrame may still read from the dir).
+    * Deletion failures are swallowed — cleanup must never fail a run.
+    */
+  def cleanAll(): Unit = {
+    var p = dirs.poll()
+    while (p != null) { deleteRec(p.toFile); p = dirs.poll() }
+  }
+
+  private def deleteRec(f: java.io.File): Unit = {
+    if (f.isDirectory) {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(deleteRec)
+    }
+    try f.delete() catch { case _: Throwable => () }
+  }
+}

@@ -446,12 +446,6 @@ private[multimodal] trait AudioCodec extends Serializable {
     FlacMeta(id, rate, channels, bps, total, durMs, decode_ok = true)
   }
 
-  /** Partition-wise FLAC metadata decode — the [[decodeWav]] contract. */
-  def decodeFlac(blobs: Dataset[MediaBlob]): Dataset[FlacMeta] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions(_.map(b => parseFlac(b.media_id, b.content)))
-  }
-
   /** Genuine minimal FLAC header: magic + last-block STREAMINFO with
     * the given parameters (zero min/max frame sizes, deterministic
     * MD5-field junk) + a few payload bytes. Any STREAMINFO reader
@@ -718,12 +712,6 @@ private[multimodal] trait AudioCodec extends Serializable {
     }
     OggTags(id, codec, vendor, title, artist, n.toInt,
       decode_ok = true)
-  }
-
-  /** Partition-wise Ogg tag decode — the [[decodeWav]] contract. */
-  def decodeOggTags(blobs: Dataset[MediaBlob]): Dataset[OggTags] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions(_.map(b => parseOggTags(b.media_id, b.content)))
   }
 
   /** Container-agnostic tag identity over a MIXED audio column: MP3

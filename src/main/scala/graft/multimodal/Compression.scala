@@ -53,24 +53,11 @@ private[multimodal] trait CompressionCodec extends Serializable {
     * reports undecodable rather than OOMing the executor.
     */
   def gunzip(bytes: Array[Byte],
-             maxBytes: Int = 1 << 26): Option[Array[Byte]] = {
+             maxBytes: Int = 1 << 26): Option[Array[Byte]] =
     if (bytes.length < 18 || (bytes(0) & 0xff) != 0x1f ||
-      (bytes(1) & 0xff) != 0x8b) return None
-    val out = new java.io.ByteArrayOutputStream()
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        if (out.size() > maxBytes) return None
-        n = in.read(buf)
-      }
-      in.close()
-      Some(out.toByteArray)
-    } catch { case _: java.io.IOException => None }
-  }
+      (bytes(1) & 0xff) != 0x8b) None
+    else drainCapped(() => new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(bytes)), maxBytes)
 
   /** Partition-wise gzip text decode — the [[decodeWav]] contract:
     * one inflater pass per partition, blobs never shuffle; output is
@@ -126,6 +113,31 @@ private[multimodal] trait CompressionCodec extends Serializable {
     } finally if (in != null) {
       try in.close() catch { case _: Throwable => () }
     }
+  }
+
+  /** Bounded `Inflater` loop over `bytes[off, off + len)`: raw
+    * deflate when `nowrap` (ZIP members), zlib-framed otherwise (PDF
+    * FlateDecode). None on a stall (truncation, or a stream that asks
+    * for a preset dictionary), past `maxBytes`, or on corruption; the
+    * inflater's native memory is freed on every exit.
+    */
+  def inflateBounded(bytes: Array[Byte], off: Int, len: Int,
+                     maxBytes: Int, nowrap: Boolean): Option[Array[Byte]] = {
+    val inf = new java.util.zip.Inflater(nowrap)
+    try {
+      inf.setInput(bytes, off, len)
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      while (!inf.finished()) {
+        val n = inf.inflate(buf)
+        if (n == 0 && !inf.finished()) return None // truncated/stuck
+        out.write(buf, 0, n)
+        if (out.size() > maxBytes) return None     // bomb cap
+      }
+      Some(out.toByteArray)
+    } catch {
+      case _: java.util.zip.DataFormatException => None
+    } finally inf.end()
   }
 
   /** Inflate a raw zlib stream (0x78 CMF — html/http payloads show up

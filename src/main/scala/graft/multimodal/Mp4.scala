@@ -664,12 +664,6 @@ private[multimodal] trait Mp4Codec extends Serializable {
       frames * 1024L * 1000L / rate, decode_ok = true)
   }
 
-  /** Partition-wise mp4a composition over the blob column */
-  def mp4AacFacts(blobs: Dataset[MediaBlob]): Dataset[Mp4Aac] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions(_.map(b => parseMp4Aac(b.media_id, b.content)))
-  }
-
   /** Minimal but real MP4/AAC: an `mp4a` track whose esds carries the
     * 2-byte AudioSpecificConfig and whose stsz/stsc/stco table lays
     * `nFrames` id-derived raw AAC access units into mdat (4 samples
@@ -919,12 +913,6 @@ private[multimodal] trait Mp4Codec extends Serializable {
     if (brand == "avis") animated = true
     AvifMeta(id, brand, width, height, depth, nItems, av1c, animated,
       decode_ok = true)
-  }
-
-  /** Partition-wise AVIF metadata walk over the blob column */
-  def avifFacts(blobs: Dataset[MediaBlob]): Dataset[AvifMeta] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions(_.map(b => parseAvif(b.media_id, b.content)))
   }
 
 }

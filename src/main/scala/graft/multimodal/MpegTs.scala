@@ -345,12 +345,6 @@ private[multimodal] trait MpegTsCodec extends Serializable {
     parseAdts(id, es.toByteArray)
   }
 
-  /** Partition-wise TS→AAC composition over the blob column */
-  def tsAudioFrames(blobs: Dataset[MediaBlob]): Dataset[AacMeta] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions(_.map(b => tsAudioAac(b.media_id, b.content)))
-  }
-
   /** TS capture whose audio PID carries a REAL ADTS stream
     * ([[syntheticAdts]]'s, so the same frames/duration closed form
     * holds after reassembly): the elementary stream is chopped into

@@ -46,6 +46,7 @@ case class PdfPage(media_id: Long, page_no: Int, n_chars: Long,
   * 100 TB crawl's PDF column into text rows.
   */
 private[multimodal] trait PdfCodec extends Serializable {
+  this: CompressionCodec =>
 
   private val PdfBadPage = PdfPage(0L, 0, -1L, "", ok = false)
   private val PdfStreamCap = 1 << 26
@@ -371,24 +372,8 @@ private[multimodal] trait PdfCodec extends Serializable {
       accOpt.flatMap { acc =>
         f match {
           case "FlateDecode" =>
-            val inf = new java.util.zip.Inflater()
-            try {
-              inf.setInput(acc)
-              val out = new java.io.ByteArrayOutputStream()
-              val buf = new Array[Byte](8192)
-              var stuck = false
-              while (!inf.finished() && !stuck) {
-                val k = inf.inflate(buf)
-                if (k == 0 && !inf.finished()) stuck = true
-                else {
-                  out.write(buf, 0, k)
-                  if (out.size() > PdfStreamCap) stuck = true
-                }
-              }
-              if (stuck) None else Some(out.toByteArray)
-            } catch {
-              case _: java.util.zip.DataFormatException => None
-            } finally inf.end()
+            inflateBounded(acc, 0, acc.length, PdfStreamCap,
+              nowrap = false)
           case "ASCIIHexDecode" =>
             val out = new java.io.ByteArrayOutputStream()
             var hi = -1

@@ -330,7 +330,7 @@ object Graph {
     var ranksCut: Option[DataFrame] = seedCut
 
     var i = 0
-    while (i < iterations) graft.BenchProbe.time(s"pr_iter$i") {
+    while (i < iterations) graft.Observe.time(s"pr_iter$i") {
       // mass parked on dangling nodes, as a broadcast one-row agg
       // (out_deg rides IN the rank frame — no join needed). Broadcast,
       // NOT a collected scalar: the broadcast builds as a sub-job of
@@ -349,11 +349,6 @@ object Graph {
         .join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(dangling)),
         withCarry = i < iterations - 1)
-      // measurement hook (guide §1): dump the ITERATION body's plan —
-      // the final frame's explain only shows checkpoint-truncated
-      // lineage, so per-iteration plan claims need this
-      if (i <= 1 && sys.env.contains("GRAFT_EXPLAIN_ITER"))
-        next.explain("formatted")
       // eager lineage cut, not persist: each iteration's plan embeds
       // the previous one ~4× (contribs, dangling, the node join), so
       // lineage grows 4^k — the ANALYZER chokes long before the
@@ -503,7 +498,7 @@ object Graph {
         .select(col("node"), (col(c) / col("s")).as(outCol))
     }
     var i = 0
-    while (i < iterations) graft.BenchProbe.time(s"hits_iter$i") {
+    while (i < iterations) graft.Observe.time(s"hits_iter$i") {
       val aRaw = Materialize.iterCut(universe.join(
         hub.select(col("node").as("src"), col("hub"))
           .join(e, Seq("src"))
@@ -598,7 +593,7 @@ object Graph {
     var labels = Materialize.iterCut(
       universe.select(col("node"), col("node").as("label")))
     var i = 0
-    while (i < iterations) graft.BenchProbe.time(s"lp_iter$i") {
+    while (i < iterations) graft.Observe.time(s"lp_iter$i") {
       val counts = und.withColumnRenamed("src", "node")
         .join(labels, Seq("node"))
         .select(col("dst").as("node"), col("label"), col("ew"))

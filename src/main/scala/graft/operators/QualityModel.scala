@@ -62,7 +62,7 @@ object QualityModel {
       .setMaxIter(50).setRegParam(0.01).setStandardization(true)
     // probe-phased (q179's bench scalar hides fit vs score): the LR
     // fit is the driver-side phase; scoring is a codegen'd scan
-    val m = graft.BenchProbe.time("lr_fit") { lr.fit(assembled) }
+    val m = graft.Observe.time("lr_fit") { lr.fit(assembled) }
     LrModel(m.coefficients.toArray, m.intercept)
   }
 

@@ -418,7 +418,7 @@ object Queries
       val tmp = graft.TempDirs.create("graft-q190x")
       val docs = t(s, dir, "documents").select($"doc_id", $"text")
       val index = docs.filter($"doc_id" % 5 =!= 0)
-      graft.BenchProbe.time("build") {
+      graft.Observe.time("build") {
         Layout.byKey(Dedup.bandBuckets(
             Dedup.minhashSignatures(index, "text", "doc_id",
               hash = Dedup.Md5), hash = Dedup.Md5), "band_hash", 4)
@@ -429,7 +429,7 @@ object Queries
         // per-batch probe: each serve's CONSTRUCTION (delta signature
         // compute + band-key collect) is timed per batch so the
         // entry's scalar decomposes in the bench probe line
-        graft.BenchProbe.time(s"serve$b") {
+        graft.Observe.time(s"serve$b") {
           val delta = docs.filter($"doc_id" % 5 === 0)
             .select(($"doc_id" + 10000000L * (b + 1)).as("doc_id"),
               $"text")

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.Dataset
+import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.MediaBlob
 
 /** One archive member: `method` ∈ {"stored","deflate","other"};
@@ -30,30 +31,6 @@ object Zip {
 
   private val BadEntry =
     ZipEntry(0L, 0, "", "", -1L, -1L, crc_ok = false, "", ok = false)
-
-  /** Bounded raw-deflate inflate: None on corruption or when the
-    * output would exceed `maxOut` (the decompression-bomb cap —
-    * q181's doctrine: a 4 KB blob claiming 4 GB must die as a row
-    * property, not an executor OOM).
-    */
-  private def inflateRaw(bytes: Array[Byte], off: Int, len: Int,
-                         maxOut: Int): Option[Array[Byte]] = {
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(bytes, off, len)
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) return None // truncated/stuck
-        out.write(buf, 0, n)
-        if (out.size() > maxOut) return None       // bomb cap
-      }
-      Some(out.toByteArray)
-    } catch {
-      case _: java.util.zip.DataFormatException => None
-    } finally inf.end()
-  }
 
   def parse(id: Long, bytes: Array[Byte],
             maxOut: Int = 1 << 26,
@@ -162,8 +139,8 @@ object Zip {
             if (compSize > maxOut) None
             else Some(java.util.Arrays.copyOfRange(bytes,
               dataOff.toInt, (dataOff + compSize).toInt))
-          } else inflateRaw(bytes, dataOff.toInt, compSize.toInt,
-            maxOut)
+          } else Multimodal.inflateBounded(bytes, dataOff.toInt,
+            compSize.toInt, maxOut, nowrap = true)
         }
       out += (extracted match {
         case Some(data) =>

@@ -199,7 +199,7 @@ object Streams {
         sp.read.parquet(seenPath)
       else firstHere.select(col("canon")).limit(0)
     val fresh = Materialize(
-      graft.BenchProbe.time("fb_probe")(frontierFresh(firstHere, known)))
+      graft.Observe.time("fb_probe")(frontierFresh(firstHere, known)))
     val enriched = fresh
       .withColumn("domain", T.registrableDomainFromUrl(col("canon")))
       .withColumn("path",
@@ -222,15 +222,15 @@ object Streams {
         (coalesce(col("prior_n"), lit(0L)) + col("brank")).cast("int"))
       .filter(col("rank") <= perDomainQuota)
       .select(col("doc_id"), col("domain"), col("canon"), col("rank")))
-    graft.BenchProbe.time("fb_counts") {
+    graft.Observe.time("fb_counts") {
       IncrementalAgg.refreshAdditive(sp, countsPath,
         admitted.select(col("domain")).withColumn("one", lit(1L)),
         Seq("domain"), Seq("one"), s"b$batchId")
     }
-    graft.BenchProbe.time("fb_admit") {
+    graft.Observe.time("fb_admit") {
       admitted.write.mode(SaveMode.Append).parquet(admittedPath)
     }
-    graft.BenchProbe.time("fb_seen") {
+    graft.Observe.time("fb_seen") {
       fresh.select(col("canon")).write.mode(SaveMode.Append)
         .parquet(seenPath)
     }

@@ -2,9 +2,10 @@ package org.apache.spark.graftbridge
 
 import org.apache.spark.SparkContext
 
-/** `SparkContext.listenerBus` is `private[spark]`; the shuffle tally
-  * (graft.ShuffleTally) needs to drain it so per-query byte deltas are
-  * complete before they are read. Same minimal-bridge pattern as
+/** `SparkContext.listenerBus` is `private[spark]`; the listener layer
+  * (`graft.Observe`) needs to drain it so an entry's byte deltas,
+  * phases and plan walks are complete before they are read. Same
+  * minimal-bridge pattern as
   * `org.apache.spark.sql.graftbridge.ColumnBridge`.
   */
 object ListenerBridge {

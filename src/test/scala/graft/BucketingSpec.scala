@@ -29,21 +29,15 @@ class BucketingSpec extends AnyFunSuite {
       // measured, not just planned: the co-located join moves no data
       // rows — only count()'s per-task partial-count rows (~0.5 KB);
       // the same join unbucketed shuffles both input relations
-      val tally = ShuffleTally.install(spark.sparkContext)
-      try {
-        val s0 = tally.snapshot(spark.sparkContext)
-        assert(bucketed.count() == 1000)
-        val db = tally.snapshot(spark.sparkContext) - s0
-        assert(db.write < 4096, s"bucketed join shuffled data: $db")
+      import SharedSpark.bytes
+      val db = bytes(assert(bucketed.count() == 1000))
+      assert(db.write < 4096, s"bucketed join shuffled data: $db")
 
-        val plain = left.join(right, "k")
-        assert(plain.queryExecution.executedPlan.toString.contains("Exchange"))
-        val s1 = tally.snapshot(spark.sparkContext)
-        assert(plain.count() == 1000)
-        val dp = tally.snapshot(spark.sparkContext) - s1
-        assert(dp.write > db.write * 10,
-          s"unbucketed join should shuffle the relations: $dp vs $db")
-      } finally spark.sparkContext.removeSparkListener(tally)
+      val plain = left.join(right, "k")
+      assert(plain.queryExecution.executedPlan.toString.contains("Exchange"))
+      val dp = bytes(assert(plain.count() == 1000))
+      assert(dp.write > db.write * 10,
+        s"unbucketed join should shuffle the relations: $dp vs $db")
     }
   }
 

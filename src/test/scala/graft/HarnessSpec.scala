@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import graft.operators.Materialize
 
 /** The shared harness core: JSON escape, post-entry cleanup, session
-  * factory config.
+  * factory config, and the listener layer (`Observe`) entries run on.
   */
 class HarnessSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -53,5 +53,51 @@ class HarnessSpec extends AnyFunSuite {
       "SELECT graft_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c")
       .head.getDouble(0)
     assert(math.abs(c - 1.0) < 1e-12)
+  }
+
+  test("Observe.entry records each micro-batch of a stream it runs; " +
+    "the next entry gets no batch phases") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[Int]
+    val (a, recA) = Observe.entry(spark, "a") {
+      stream.addData(1, 2)
+      val q = stream.toDF().writeStream.format("memory")
+        .queryName("observe_batches").start()
+      try {
+        q.processAllAvailable()
+        stream.addData(3)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    assert(a.isRight, a)
+    val labels = recA.phases.map(_._1)
+    assert(Set("batch0", "batch1").subsetOf(labels.toSet), labels)
+    val (b, recB) = Observe.entry(spark, "b")(spark.range(10).count())
+    assert(b == Right(10L))
+    assert(!recB.phases.exists(_._1.startsWith("batch")), recB.phases)
+  }
+
+  test("Observe.time records only inside an entry") {
+    assert(Observe.time("outside")(41 + 1) == 42)
+    val (out, rec) = Observe.entry(spark, "t")(Observe.time("inside")(7))
+    assert(out == Right(7))
+    assert(rec.phases.map(_._1) == Seq("inside"))
+    assert(Observe.time("after")("x") == "x")
+    val (_, next) = Observe.entry(spark, "u")(())
+    assert(next.phases.isEmpty, next.phases)
+  }
+
+  test("Observe.entry names the interpreted expressions its plans run " +
+    "and returns the body's failure") {
+    import org.apache.spark.sql.functions.expr
+    val (out, rec) = Observe.entry(spark, "f")(spark.range(3)
+      .select(expr("transform(array(1, 2), x -> x + 1)")).collect())
+    assert(out.isRight)
+    assert(rec.fallbacks.contains("transform"), rec.fallbacks)
+    val (bad, _) = Observe.entry(spark, "g")(
+      spark.read.parquet("/nonexistent-observe-input").count())
+    assert(bad.isLeft)
   }
 }

@@ -11,90 +11,77 @@ import graft.operators.Dedup
 class ScaleSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
   import spark.implicits._
+  import SharedSpark.bytes
 
   test("shuffle tally counts bytes for a shuffling job and stays flat " +
     "for a map-only one") {
-    val tally = ShuffleTally.install(spark.sparkContext)
-    try {
-      val s0 = tally.snapshot(spark.sparkContext)
+    val afterShuffle = bytes(
       spark.range(100000).selectExpr("id % 97 AS k", "id AS v")
-        .repartition(4).groupBy("k").count().count()
-      val afterShuffle = tally.snapshot(spark.sparkContext) - s0
-      assert(afterShuffle.write > 0 && afterShuffle.read > 0)
-      val s1 = tally.snapshot(spark.sparkContext)
-      spark.range(100000).selectExpr("id + 1 AS v").count()
-      val mapOnly = tally.snapshot(spark.sparkContext) - s1
-      // count() ships one partial-count row per partition — a few
-      // hundred bytes, not a data shuffle
-      assert(mapOnly.write < 4096, s"map-only job wrote shuffle: $mapOnly")
-    } finally spark.sparkContext.removeSparkListener(tally)
+        .repartition(4).groupBy("k").count().count())
+    assert(afterShuffle.write > 0 && afterShuffle.read > 0)
+    val mapOnly = bytes(spark.range(100000).selectExpr("id + 1 AS v").count())
+    // count() ships one partial-count row per partition — a few
+    // hundred bytes, not a data shuffle
+    assert(mapOnly.write < 4096, s"map-only job wrote shuffle: $mapOnly")
   }
 
   test("minhash candidate shuffle volume tracks SIGNATURE size, not " +
     "text size: 4x the text moves <2x the bytes") {
-    val tally = ShuffleTally.install(spark.sparkContext)
-    try {
-      // distinct-vocab docs (no near-dup pairs) in a LOCAL relation —
-      // no repartition, so the only exchanges measured are the
-      // operator's own; rep scales each doc's text length only
-      def mkDocs(rep: Int) = (0 until 200).map { i =>
-        val rnd = new scala.util.Random(i)
-        val words = Seq.fill(30 * rep)("w" + rnd.nextInt(1000000))
-        (i.toLong, words.mkString(" "))
-      }.toDF("doc_id", "text")
-      def shuffled(rep: Int): Long = {
-        val s0 = tally.snapshot(spark.sparkContext)
+    // distinct-vocab docs (no near-dup pairs) in a LOCAL relation —
+    // no repartition, so the only exchanges measured are the
+    // operator's own; rep scales each doc's text length only
+    def mkDocs(rep: Int) = (0 until 200).map { i =>
+      val rnd = new scala.util.Random(i)
+      val words = Seq.fill(30 * rep)("w" + rnd.nextInt(1000000))
+      (i.toLong, words.mkString(" "))
+    }.toDF("doc_id", "text")
+    def shuffled(rep: Int): Long =
+      bytes {
         Dedup.minhashCandidates(mkDocs(rep), "text", "doc_id").count()
-        (tally.snapshot(spark.sparkContext) - s0).write
+      }.write
+    // signatures are computed map-side (no shuffle); the band-key
+    // self-join is the operator's shuffle at corpus scale, so forbid
+    // the broadcast this 200-doc fixture would otherwise get
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val old = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    val (small, large) =
+      try (shuffled(1), shuffled(4))
+      finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
-      // signatures are computed map-side (no shuffle); the band-key
-      // self-join is the operator's shuffle at corpus scale, so forbid
-      // the broadcast this 200-doc fixture would otherwise get
-      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      val old = keys.map(k => k -> spark.conf.getOption(k))
-      keys.foreach(spark.conf.set(_, "-1"))
-      val (small, large) =
-        try (shuffled(1), shuffled(4))
-        finally old.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      assert(small > 0, "expected the band-key self-join to shuffle")
-      // the join ships (id, band, band_hash) rows: fixed-width hashes of
-      // the signature, constant in text length
-      assert(large < small * 2,
-        s"shuffle bytes scaled with text size: $small -> $large")
-    } finally spark.sparkContext.removeSparkListener(tally)
+    assert(small > 0, "expected the band-key self-join to shuffle")
+    // the join ships (id, band, band_hash) rows: fixed-width hashes of
+    // the signature, constant in text length
+    assert(large < small * 2,
+      s"shuffle bytes scaled with text size: $small -> $large")
   }
 
   test("substring-dedup shuffle volume tracks token COUNT, not token " +
     "size: 4x the characters per token moves ~the same bytes") {
-    val tally = ShuffleTally.install(spark.sparkContext)
-    try {
-      // fixed 40 tokens per doc, distinct vocab (no duplicate sites);
-      // rep scales only each token's CHARACTER length — fixed-width
-      // 12·rep chars per token, so rep=4 is a true 4x — while the
-      // shuffle carries (fp, doc, pos) rows whose width is hash-fixed,
-      // so the bytes moved must not follow the text size
-      def mkDocs(rep: Int) = (0 until 200).map { i =>
-        val rnd = new scala.util.Random(i)
-        val pad = "x" * (12 * rep - 6)
-        val words = Seq.fill(40)(pad + "%06d".format(rnd.nextInt(1000000)))
-        (i.toLong, words.mkString(" "))
-      }.toDF("doc_id", "text")
-      def shuffled(rep: Int): Long = {
-        val s0 = tally.snapshot(spark.sparkContext)
+    // fixed 40 tokens per doc, distinct vocab (no duplicate sites);
+    // rep scales only each token's CHARACTER length — fixed-width
+    // 12·rep chars per token, so rep=4 is a true 4x — while the
+    // shuffle carries (fp, doc, pos) rows whose width is hash-fixed,
+    // so the bytes moved must not follow the text size
+    def mkDocs(rep: Int) = (0 until 200).map { i =>
+      val rnd = new scala.util.Random(i)
+      val pad = "x" * (12 * rep - 6)
+      val words = Seq.fill(40)(pad + "%06d".format(rnd.nextInt(1000000)))
+      (i.toLong, words.mkString(" "))
+    }.toDF("doc_id", "text")
+    def shuffled(rep: Int): Long =
+      bytes {
         Dedup.duplicateSpans(mkDocs(rep), "doc_id", "text", k = 6)
           .count()
-        (tally.snapshot(spark.sparkContext) - s0).write
-      }
-      val small = shuffled(1)
-      val large = shuffled(4)
-      assert(small > 0, "expected the fingerprint window to shuffle")
-      assert(large < small * 3 / 2,
-        s"shuffle bytes scaled with token size: $small -> $large")
-    } finally spark.sparkContext.removeSparkListener(tally)
+      }.write
+    val small = shuffled(1)
+    val large = shuffled(4)
+    assert(small > 0, "expected the fingerprint window to shuffle")
+    assert(large < small * 3 / 2,
+      s"shuffle bytes scaled with token size: $small -> $large")
   }
 
   test("hnsw resident serve: after prepare+cache, a query batch moves " +
@@ -109,57 +96,46 @@ class ScaleSpec extends AnyFunSuite {
     val queries = (0 until 20).map(i =>
       (10000L + i, Array.fill(64)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
-    val tally = ShuffleTally.install(spark.sparkContext)
-    try {
-      val prepared = Hnsw.prepare(Hnsw.buildShards(corpus, "vec_id",
-        "embedding", shards = 4)).cache()
-      prepared.count() // materialize: build + co-location paid HERE
-      val s0 = tally.snapshot(spark.sparkContext)
-      Hnsw.topKResident(prepared, queries, "vec_id", "embedding",
-        k = 10, ef = 128).count()
-      val batch1 = (tally.snapshot(spark.sparkContext) - s0).write
-      val s1 = tally.snapshot(spark.sparkContext)
-      Hnsw.topKResident(prepared, queries, "vec_id", "embedding",
-        k = 10, ef = 128).count()
-      val batch2 = (tally.snapshot(spark.sparkContext) - s1).write
-      // corpus ≈ 2000 rows × (64 dims × 8 B + links) ≈ 1.3+ MB; a
-      // served batch shuffles only the queries × shards × k candidate
-      // rows into the merge window — two orders of magnitude smaller
-      val cap = 100 * 1024L
-      assert(batch1 < cap, s"batch 1 re-exchanged the index: $batch1 B")
-      assert(batch2 < cap, s"batch 2 re-exchanged the index: $batch2 B")
-    } finally spark.sparkContext.removeSparkListener(tally)
+    val prepared = Hnsw.prepare(Hnsw.buildShards(corpus, "vec_id",
+      "embedding", shards = 4)).cache()
+    prepared.count() // materialize: build + co-location paid HERE
+    val batch1 = bytes(Hnsw.topKResident(prepared, queries, "vec_id",
+      "embedding", k = 10, ef = 128).count()).write
+    val batch2 = bytes(Hnsw.topKResident(prepared, queries, "vec_id",
+      "embedding", k = 10, ef = 128).count()).write
+    // corpus ≈ 2000 rows × (64 dims × 8 B + links) ≈ 1.3+ MB; a
+    // served batch shuffles only the queries × shards × k candidate
+    // rows into the merge window — two orders of magnitude smaller
+    val cap = 100 * 1024L
+    assert(batch1 < cap, s"batch 1 re-exchanged the index: $batch1 B")
+    assert(batch2 < cap, s"batch 2 re-exchanged the index: $batch2 B")
   }
 
   test("robots admission shuffle volume tracks URL count, not " +
     "rule-match count: 8x the rules per site moves <2x the bytes " +
     "(the packed-long max combines map-side)") {
-    val tally = ShuffleTally.install(spark.sparkContext)
-    try {
-      import graft.operators.Robots
-      // every rule matches every path, so the url×rule multiplication
-      // is real; a verdict that shipped matched rows would scale ~8x
-      def mkRules(nPerSite: Int) = (0 until 4).flatMap { s =>
-        (0 until nPerSite).map { r =>
-          // every pattern is a prefix of every path → every rule MATCHES
-          (s.toLong, r % 2 == 0, "/p/path-".take(2 + r % 6))
-        }
-      }.toDF("site", "allow", "pattern")
-      val urls = (0 until 2000).map { i =>
-        (i.toLong, (i % 4).toLong, s"/p/path-$i")
-      }.toDF("uid", "site", "path")
-      def shuffled(nPerSite: Int): Long = {
-        val s0 = tally.snapshot(spark.sparkContext)
+    import graft.operators.Robots
+    // every rule matches every path, so the url×rule multiplication
+    // is real; a verdict that shipped matched rows would scale ~8x
+    def mkRules(nPerSite: Int) = (0 until 4).flatMap { s =>
+      (0 until nPerSite).map { r =>
+        // every pattern is a prefix of every path → every rule MATCHES
+        (s.toLong, r % 2 == 0, "/p/path-".take(2 + r % 6))
+      }
+    }.toDF("site", "allow", "pattern")
+    val urls = (0 until 2000).map { i =>
+      (i.toLong, (i % 4).toLong, s"/p/path-$i")
+    }.toDF("uid", "site", "path")
+    def shuffled(nPerSite: Int): Long =
+      bytes {
         Robots.isAllowed(urls, mkRules(nPerSite), "site", "path")
           .count()
-        (tally.snapshot(spark.sparkContext) - s0).write
-      }
-      val small = shuffled(2)
-      val large = shuffled(16)
-      assert(small > 0, "expected the verdict aggregation to shuffle")
-      assert(large < small * 2,
-        s"shuffle bytes scaled with rule count: $small -> $large")
-    } finally spark.sparkContext.removeSparkListener(tally)
+      }.write
+    val small = shuffled(2)
+    val large = shuffled(16)
+    assert(small > 0, "expected the verdict aggregation to shuffle")
+    assert(large < small * 2,
+      s"shuffle bytes scaled with rule count: $small -> $large")
   }
 
   test("pruned dedup-index probe reads a FRACTION of the index: the " +
@@ -236,25 +212,22 @@ class ScaleSpec extends AnyFunSuite {
     val firstHere = (0 until 200)
       .map(i => (i.toLong, s"http://s/${i * 500}"))
       .toDF("doc_id", "canon")
-    val tally = ShuffleTally.install(spark.sparkContext)
-    try {
-      def shuffled(nSeen: Int): Long = {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-frontier-scale").toString
-        mkSeen(nSeen, s"$dir/seen")
-        val s0 = tally.snapshot(spark.sparkContext)
+    def shuffled(nSeen: Int): Long = {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-frontier-scale").toString
+      mkSeen(nSeen, s"$dir/seen")
+      bytes {
         Streams.frontierFresh(firstHere,
           spark.read.parquet(s"$dir/seen")).count()
-        (tally.snapshot(spark.sparkContext) - s0).write
-      }
-      val small = shuffled(25000)
-      val large = shuffled(200000)
-      // both joins are broadcast (bloom build ships one bitset row;
-      // broadcasts are not shuffle) — bytes must be near-zero and
-      // FLAT in history size. 64 KB tolerates partial-agg rows.
-      val cap = 64 * 1024L
-      assert(small <= cap, s"probe shuffled at 25k history: $small B")
-      assert(large <= cap, s"probe shuffled at 200k history: $large B")
-    } finally spark.sparkContext.removeSparkListener(tally)
+      }.write
+    }
+    val small = shuffled(25000)
+    val large = shuffled(200000)
+    // both joins are broadcast (bloom build ships one bitset row;
+    // broadcasts are not shuffle) — bytes must be near-zero and
+    // FLAT in history size. 64 KB tolerates partial-agg rows.
+    val cap = 64 * 1024L
+    assert(small <= cap, s"probe shuffled at 25k history: $small B")
+    assert(large <= cap, s"probe shuffled at 200k history: $large B")
   }
 }

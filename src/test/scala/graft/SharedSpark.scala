@@ -14,4 +14,12 @@ object SharedSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** `body`'s task byte deltas, run as one [[Observe.entry]] on the
+    * shared session; a failing body fails the caller.
+    */
+  def bytes(body: => Any): Observe.Bytes = {
+    val (out, rec) = Observe.entry(spark, "test")(body)
+    out.fold(e => throw e, _ => rec.shuffle)
+  }
 }
