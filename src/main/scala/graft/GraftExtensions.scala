@@ -19,11 +19,6 @@ import graft.functions.ColumnPlugins
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // let-binding codegen rewrite: once everything is resolved, hoist
-    // the bound() idiom's interpreted single-element transform into an
-    // aliased projection below the consuming operator (runs in the
-    // operator-optimization batch; see RewriteBoundLambda)
-    ext.injectOptimizerRule(_ => graft.expressions.RewriteBoundLambda)
     ext.injectFunction((
       new FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),

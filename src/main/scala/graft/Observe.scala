@@ -11,7 +11,10 @@ import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -27,9 +30,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    seconds, in arrival order;
   *  - fallbacks: the `CodegenFallback` expressions (interpreted per
   *    row inside otherwise-codegen stages) of every plan the entry
-  *    executes, checkpoint- and write-hidden intermediates included.
-  *    The walk does not descend into an `AdaptiveSparkPlanExec` (a
-  *    leaf to `foreach`), so a plan AQE adapts reports none.
+  *    executes, checkpoint- and write-hidden intermediates included,
+  *    adaptive plans walked through their final stages.
   *
   * Everything records only while an [[entry]] is active: library
   * callers, Verify and the test suites pay one volatile read per
@@ -139,12 +141,22 @@ object Observe {
   }
 
   private object Plans extends QueryExecutionListener {
-    private def walk(qe: QueryExecution): Unit =
-      if (current != null)
-        try qe.executedPlan.foreach(_.expressions.foreach(_.foreach {
+    // `foreach` treats an adaptive plan, its query stages and reused
+    // exchanges as leaves: descend into what each wraps
+    private def visit(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => visit(a.executedPlan)
+      case q: QueryStageExec => visit(q.plan)
+      case r: ReusedExchangeExec => visit(r.child)
+      case _ =>
+        p.expressions.foreach(_.foreach {
           case e: CodegenFallback => fallbacks.add(e.prettyName)
           case _ => ()
-        })) catch {
+        })
+        (p.children ++ p.subqueries).foreach(visit)
+    }
+    private def walk(qe: QueryExecution): Unit =
+      if (current != null)
+        try visit(qe.executedPlan) catch {
           case NonFatal(e) =>
             System.err.println(s"[observe] plan walk failed: $e")
         }

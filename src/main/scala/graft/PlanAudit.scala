@@ -7,8 +7,7 @@ package graft
   * a final-frame explain cannot see (signature materializations, index
   * builds, micro-batch sinks) — and report every expression that mixes
   * in `CodegenFallback`, i.e. runs interpreted per row inside
-  * otherwise-codegen stages (plans AQE adapts are not walked; see
-  * [[Observe]]). Output: one line per query
+  * otherwise-codegen stages. Output: one line per query
   * (`name: expr[,expr…]` or `-`), committable as the round's codegen
   * evidence.
   *

@@ -109,10 +109,12 @@ object Text {
   }
 
   /** Summary text → bullet array: split lines, trim, drop empties
-    * (summarize_utils.py:78).
+    * (summarize_utils.py:78). Written without HOFs: a HOF runs
+    * interpreted, and so does its argument, which then escapes
+    * codegen's subexpression elimination.
     */
   def summaryBullets(c: Column): Column =
-    filter(transform(split(c, "\n"), s => trim(s)), s => length(s) > 0)
+    array_remove(split(trim(regexp_replace(c, " *\n *", "\n")), "\n"), "")
 
   /** P5: non-blank after trimming (article.py:75-80 alias constraint). */
   def nonBlank(c: Column): Column = length(trim(c)) >= 1

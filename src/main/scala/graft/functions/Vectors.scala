@@ -10,28 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Vectors {
 
-  /** Let-binding for column expressions: evaluate `value` ONCE per row
-    * and hand it to `body` as a shared reference. Catalyst inlines
-    * projected subexpressions into every use site (no CSE through
-    * lambda captures), so any value referenced more than once — or
-    * referenced inside a HOF lambda, where it would re-evaluate per
-    * element — must be pinned this way.
-    *
-    * The single-element-transform spelling below is what the ANALYZER
-    * sees (lambda-binding is the one pre-analysis construct that can
-    * carry a let); it is CodegenFallback, so left as-is every bound
-    * kernel body would run interpreted. The injected optimizer rule
-    * [[graft.expressions.RewriteBoundLambda]] hoists the resolved
-    * pattern directly: the bound value becomes an alias in a
-    * projection inserted below the consuming operator, and the lambda
-    * variable becomes that attribute — single evaluation AND
-    * whole-stage codegen. (Catalyst's `With`/RewriteWithExpression
-    * machinery was tried and declines refs inside lambda bodies and
-    * Generate operators; see the rule's scaladoc.)
-    */
-  def bound(value: Column)(body: Column => Column): Column =
-    element_at(transform(array(value), body), 1)
-
   private def native(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : Column = org.apache.spark.sql.graftbridge.ColumnBridge.column(e)
   private def expr(c: Column) =
@@ -76,18 +54,6 @@ object Vectors {
     val nb = sqrt(dotHof(b, b))
     when(na > 0.0 && nb > 0.0, d / (na * nb))
   }
-
-  /** L2-normalize (prep for LSH / banded ANN where dot == cosine).
-    * Both the vector and its norm are bound: the norm would otherwise
-    * be inlined into the per-element division lambda and re-computed
-    * per component — O(dim²) per row.
-    */
-  def l2Normalize(v: Column): Column =
-    bound(toDouble(v)) { dv =>
-      bound(sqrt(dot(dv, dv))) { n =>
-        when(n > 0.0, transform(dv, x => x / n))
-      }
-    }
 
   /** Element-wise sum of two equal-length vectors. */
   def add(a: Column, b: Column): Column =

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Vectors.bound
-
 /** Training-data curation operators beyond the reference's surface:
   * the selection/packing steps a large-scale pretraining pipeline runs
   * after dedup and quality scoring. All relational — the per-doc
@@ -37,12 +35,13 @@ object Curation {
     val wordStats = words.groupBy(id).agg(
       count(lit(1)).as("n_words"),
       countDistinct(col("w")).as("n_distinct"))
-    val bigrams = docs.select(id, explode(bound(wordArr(col(textCol))) { w =>
-      when(size(w) >= 2,
+    // stage the word array: the bigram lambda reads it per element
+    val w = col("__w")
+    val bigrams = docs.select(id, wordArr(col(textCol)).as("__w"))
+      .select(id, explode(when(size(w) >= 2,
         transform(sequence(lit(1), size(w) - 1), i =>
           concat(element_at(w, i), lit(" "), element_at(w, i + 1))))
-        .otherwise(array().cast("array<string>"))
-    }).as("b"))
+        .otherwise(array().cast("array<string>"))).as("b"))
     val bigramStats = bigrams.groupBy(id, col("b"))
       .agg(count(lit(1)).as("c"))
       .groupBy(id).agg(max(col("c")).as("top_c"), sum(col("c")).as("n_bg"))
@@ -192,12 +191,12 @@ object Curation {
   def decontaminate(corpus: DataFrame, textCol: String, idCol: String,
       eval: DataFrame, evalTextCol: String, n: Int = 13,
       minHits: Long = 1L): DataFrame = {
-    val es = eval
-      .select(explode(Dedup.shingleHashes(col(evalTextCol), n)).as("h"))
+    val es = eval.select(Retrieval.tokens(col(evalTextCol)).as("w"))
+      .select(explode(Dedup.shingleHashes(col("w"), n)).as("h"))
       .distinct()
     val contaminated = corpus
-      .select(col(idCol).as("__id"),
-        explode(Dedup.shingleHashes(col(textCol), n)).as("h"))
+      .select(col(idCol).as("__id"), Retrieval.tokens(col(textCol)).as("w"))
+      .select(col("__id"), explode(Dedup.shingleHashes(col("w"), n)).as("h"))
       .join(broadcast(es), "h")
       .groupBy(col("__id")).agg(count(lit(1)).as("hits"))
       .filter(col("hits") >= minHits)

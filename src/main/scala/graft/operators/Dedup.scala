@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.expressions.{Md5U32, MinHashSignature}
-import graft.functions.Vectors.bound
 
 /** Deduplication family for large-scale corpus curation: exact
   * (hash-groupBy), MinHash+LSH banding, SimHash, n-gram Jaccard.
@@ -51,20 +50,21 @@ object Dedup {
   private def native(e: Expression): Column = ColumnBridge.column(e)
   private def expr(c: Column): Expression = ColumnBridge.expression(c)
 
-  /** Word 3-shingles (distinct), lowercased. The word array is bound
-    * once; without the binding the split+filter re-runs for every
-    * element_at — O(words²) per doc.
+  /** Word n-shingles (distinct) of a [[Retrieval.tokens]] array. The
+    * array is read inside the per-shingle lambda, so pass a column
+    * staged by a `select`: an inlined split re-runs per shingle —
+    * O(words²) per doc.
     */
-  def shingles(text: Column, n: Int = 3): Column =
-    bound(array_remove(split(lower(text), "\\s+"), "")) { words =>
-      val count = size(words) - (n - 1)
-      when(count > 0,
-        array_distinct(transform(sequence(lit(1), count), i =>
-          concat_ws(" ", (0 until n).map(j => element_at(words, i + j)): _*))))
-        .otherwise(array().cast("array<string>"))
-    }
+  def shingles(words: Column, n: Int = 3): Column = {
+    val count = size(words) - (n - 1)
+    when(count > 0,
+      array_distinct(transform(sequence(lit(1), count), i =>
+        concat_ws(" ", (0 until n).map(j => element_at(words, i + j)): _*))))
+      .otherwise(array().cast("array<string>"))
+  }
 
-  /** Hashes of word n-shingles, skipping the string materialization:
+  /** Hashes of a token array's n-shingles (staged as for
+    * [[shingles]]), skipping the string materialization:
     * `xxhash64(w1, w2, w3)` hashes the shingle's words directly, so no
     * per-shingle `concat_ws` string is ever allocated and the distinct
     * runs over longs, not strings. Signatures only consume shingle
@@ -75,14 +75,13 @@ object Dedup {
     * string form — their postings/intersections are defined on the
     * shingle values themselves.
     */
-  def shingleHashes(text: Column, n: Int = 3): Column =
-    bound(array_remove(split(lower(text), "\\s+"), "")) { words =>
-      val count = size(words) - (n - 1)
-      when(count > 0,
-        array_distinct(transform(sequence(lit(1), count), i =>
-          xxhash64((0 until n).map(j => element_at(words, i + j)): _*))))
-        .otherwise(array().cast("array<bigint>"))
-    }
+  def shingleHashes(words: Column, n: Int = 3): Column = {
+    val count = size(words) - (n - 1)
+    when(count > 0,
+      array_distinct(transform(sequence(lit(1), count), i =>
+        xxhash64((0 until n).map(j => element_at(words, i + j)): _*))))
+      .otherwise(array().cast("array<bigint>"))
+  }
 
   /** Exact dedup: keep one survivor row per normalized-text fingerprint
     * (min of `idCol` = deterministic survivor). Returns
@@ -109,21 +108,20 @@ object Dedup {
     * Docs sharing any (band index, band hash) are near-dup candidates.
     * In [[Md5]] mode the band key is the RAW minima CSV string — no
     * false positives, and any SQL engine reproduces the join key by
-    * string equality.
+    * string equality. `signature` is read once per band: pass a
+    * column, not the kernel call.
     */
   def lshBandKeys(signature: Column, bands: Int, rows: Int,
                   hash: SigHash = Xx64): Column =
-    bound(signature) { sg =>
-      // a null (degenerate) signature has no band keys
-      when(sg.isNotNull, array((0 until bands).map { b =>
-        val key = array_join(slice(sg, b * rows + 1, rows), ",")
-        struct(lit(b).as("band"),
-          (hash match {
-            case Xx64 => xxhash64(key)
-            case Md5  => key
-          }).as("band_hash"))
-      }: _*))
-    }
+    // a null (degenerate) signature has no band keys
+    when(signature.isNotNull, array((0 until bands).map { b =>
+      val key = array_join(slice(signature, b * rows + 1, rows), ",")
+      struct(lit(b).as("band"),
+        (hash match {
+          case Xx64 => xxhash64(key)
+          case Md5  => key
+        }).as("band_hash"))
+    }: _*))
 
   /** Per-doc MinHash signatures as a relation `(id, sig)`: one
     * projection of [[minhashSignature]] — no explode, no shuffle.
@@ -280,9 +278,12 @@ object Dedup {
     when(union > 0, inter / union).otherwise(lit(0.0))
   }
 
-  /** Exact n-gram Jaccard between two texts' shingle sets. */
+  /** Exact n-gram Jaccard between two texts' shingle sets (a per-pair
+    * reference: it re-splits each text per shingle).
+    */
   def jaccard(textA: Column, textB: Column, n: Int = 3): Column =
-    jaccardOfSets(shingles(textA, n), shingles(textB, n))
+    jaccardOfSets(shingles(Retrieval.tokens(textA), n),
+      shingles(Retrieval.tokens(textB), n))
 
   /** All-pairs exact Jaccard above a threshold, via a shingle inverted
     * index instead of a cross join: explode (id, shingle), self-join on
@@ -297,8 +298,9 @@ object Dedup {
   def jaccardPairs(df: DataFrame, textCol: String, idCol: String,
                    minJaccard: Double = 0.0,
                    maxDocFreq: Option[Int] = None): DataFrame = {
-    val sh = df.select(col(idCol).as("id"),
-      explode(shingles(col(textCol))).as("sgl"))
+    val sh = df
+      .select(col(idCol).as("id"), Retrieval.tokens(col(textCol)).as("w"))
+      .select(col("id"), explode(shingles(col("w"))).as("sgl"))
     val posting = maxDocFreq match {
       case Some(m) =>
         val hot = sh.groupBy("sgl").agg(count(lit(1)).as("df"))
@@ -403,8 +405,9 @@ object Dedup {
     */
   def dropNearDupsWith(df: DataFrame, textCol: String, idCol: String,
                        cands: DataFrame, minJaccard: Double): DataFrame = {
-    val sh = df.select(col(idCol).as("vid"),
-      shingles(col(textCol)).as("vsh"))
+    val sh = df
+      .select(col(idCol).as("vid"), Retrieval.tokens(col(textCol)).as("w"))
+      .select(col("vid"), shingles(col("w")).as("vsh"))
     val verified = cands
       .join(sh.select(col("vid").as("id_a"), col("vsh").as("sh_a")), "id_a")
       .join(sh.select(col("vid").as("id_b"), col("vsh").as("sh_b")), "id_b")
@@ -427,13 +430,13 @@ object Dedup {
   def simhashSignatures(df: DataFrame, textCol: String, idCol: String,
                         hash: SigHash = Xx64): DataFrame = {
     val width = simhashWidth(hash)
+    val w = df
+      .select(col(idCol).as("id"), Retrieval.tokens(col(textCol)).as("w"))
     val hashed = hash match {
       case Xx64 =>
-        df.select(col(idCol).as("id"),
-          explode(shingleHashes(col(textCol))).as("h"))
+        w.select(col("id"), explode(shingleHashes(col("w"))).as("h"))
       case Md5 =>
-        df.select(col(idCol).as("id"),
-            explode(shingles(col(textCol))).as("sgl"))
+        w.select(col("id"), explode(shingles(col("w"))).as("sgl"))
           .select(col("id"), md5u32(col("sgl")).as("h"))
     }
     val bitSums = (0 until width).map(j =>
@@ -498,29 +501,23 @@ object Dedup {
       .filter(col("dist") <= maxHamming)
   }
 
-  /** Normalized token stream shared by the substring-dedup family:
-    * [[Retrieval.tokens]] (lowercase, whitespace-split, empties
-    * dropped, null-safe), bound once per row — one tokenizer
-    * definition across BM25 / substring dedup / the LM.
-    */
-  private def substrToks(text: Column): Column = Retrieval.tokens(text)
-
   /** Fingerprints of every token k-gram WITH its position: one array
     * element per start index 0..len−k, computed scan-side (no shuffle,
     * no per-gram string in Xx64 mode — the multi-arg xxhash64 trick
     * from [[shingleHashes]], positions implicit in array order).
+    * `toks` is a staged [[Retrieval.tokens]] column (read inside the
+    * lambda).
     */
-  private def gramFps(text: Column, k: Int, hash: SigHash): Column =
-    bound(substrToks(text)) { toks =>
-      val count = size(toks) - (k - 1)
-      when(count > 0, transform(sequence(lit(1), count), i =>
-        hash match {
-          case Xx64 => xxhash64((0 until k).map(j =>
-            element_at(toks, i + j)): _*)
-          case Md5 => md5u32(concat_ws(" ", (0 until k).map(j =>
-            element_at(toks, i + j)): _*))
-        })).otherwise(array().cast("array<bigint>"))
-    }
+  private def gramFps(toks: Column, k: Int, hash: SigHash): Column = {
+    val count = size(toks) - (k - 1)
+    when(count > 0, transform(sequence(lit(1), count), i =>
+      hash match {
+        case Xx64 => xxhash64((0 until k).map(j =>
+          element_at(toks, i + j)): _*)
+        case Md5 => md5u32(concat_ws(" ", (0 until k).map(j =>
+          element_at(toks, i + j)): _*))
+      })).otherwise(array().cast("array<bigint>"))
+  }
 
   /** EXACT SUBSTRING DEDUP — the span-level operator document-level
     * dedup cannot express (Lee, Ippolito et al., "Deduplicating
@@ -547,8 +544,9 @@ object Dedup {
                      k: Int = 8, hash: SigHash = Xx64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val occ = df.select(col(idCol).cast("long").as("doc_id"),
-        posexplode(gramFps(col(textCol), k, hash))
-          .as(Seq("pos", "fp")))
+        Retrieval.tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"),
+        posexplode(gramFps(col("toks"), k, hash)).as(Seq("pos", "fp")))
     // rn > 1 ⇔ a non-first occurrence of a fingerprint seen ≥ 2 times;
     // (doc_id, pos) is unique per fp, so the order is total
     val wFp = Window.partitionBy(col("fp"))
@@ -593,25 +591,23 @@ object Dedup {
     val spanArr = spans.groupBy(col("doc_id"))
       .agg(collect_list(struct(col("span_start"), col("span_end")))
         .as("__spans"))
+    // stage the tokens, the spans the filter lambda reads, and the kept
+    // tokens read three times below
     df.select(col(idCol).cast("long").as("doc_id"), col(textCol))
       .join(spanArr, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), Retrieval.tokens(col(textCol)).as("toks"),
+        coalesce(col("__spans"),
+          array().cast("array<struct<span_start:long,span_end:long>>"))
+          .as("sp"))
+      .select(col("doc_id"), col("toks"),
+        filter(col("toks"), (_, i) =>
+          !exists(col("sp"), s => i >= s.getField("span_start") &&
+            i < s.getField("span_end"))).as("kept"))
       .select(col("doc_id"),
-        bound(substrToks(col(textCol))) { toks =>
-          bound(coalesce(col("__spans"),
-            array().cast("array<struct<span_start:long,span_end:long>>"))
-          ) { sp =>
-            val kept = filter(toks, (_, i) =>
-              !exists(sp, s => i >= s.getField("span_start") &&
-                i < s.getField("span_end")))
-            struct(
-              concat_ws(" ", kept).as("clean_text"),
-              size(kept).cast("long").as("kept_tokens"),
-              (size(toks) - size(kept)).cast("long")
-                .as("removed_tokens"))
-          }
-        }.as("__out"))
-      .select(col("doc_id"), col("__out.clean_text"),
-        col("__out.kept_tokens"), col("__out.removed_tokens"))
+        concat_ws(" ", col("kept")).as("clean_text"),
+        size(col("kept")).cast("long").as("kept_tokens"),
+        (size(col("toks")) - size(col("kept"))).cast("long")
+          .as("removed_tokens"))
   }
 
   /** Corpus-wide LINE-level boilerplate removal — the C4 cleaning

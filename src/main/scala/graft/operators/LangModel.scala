@@ -47,18 +47,16 @@ object LangModel {
   // null-safe (null text → empty array → tokens = 0, unscorable)
   private def toks(text: Column): Column = Retrieval.tokens(text)
 
-  /** Adjacent-pair structs from a bound token array: one element per
-    * transition (w_i, w_{i+1}), computed scan-side.
+  /** Adjacent-pair structs from a staged token-array column: one
+    * element per transition (w_i, w_{i+1}), computed scan-side.
     */
   private def bigramsOf(tk: Column): Column =
-    graft.functions.Vectors.bound(tk) { t =>
-      when(size(t) >= 2,
-        transform(sequence(lit(1), size(t) - 1), i =>
-          struct(element_at(t, i).as("tok1"),
-            element_at(t, i + 1).as("tok2"))))
-        .otherwise(array().cast(
-          "array<struct<tok1:string,tok2:string>>"))
-    }
+    when(size(tk) >= 2,
+      transform(sequence(lit(1), size(tk) - 1), i =>
+        struct(element_at(tk, i).as("tok1"),
+          element_at(tk, i + 1).as("tok2"))))
+      .otherwise(array().cast(
+        "array<struct<tok1:string,tok2:string>>"))
 
   /** Count relations only — no vocab count job. Shared by the public
     * fit and the incremental append (which recounts the vocab on the

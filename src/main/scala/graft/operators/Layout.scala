@@ -54,15 +54,13 @@ object Layout {
             floor((c.cast("double") - lo) / (hi - lo) * (maxBin + 1))
               .cast("long")))
         .otherwise(0L)
-    def interleave(za: Column, zb: Column): Column =
-      graft.functions.Vectors.bound(za) { a =>
-        graft.functions.Vectors.bound(zb) { b =>
-          (0 until bits).map { i =>
-            shiftleft(shiftright(a, i).bitwiseAND(1), 2 * i)
-              .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(1), 2 * i + 1))
-          }.reduce((x, y) => x.bitwiseOR(y))
-        }
-      }
+    // each bin repeats `bits` times with no lambda between the copies:
+    // codegen's subexpression elimination evaluates it once
+    def interleave(a: Column, b: Column): Column =
+      (0 until bits).map { i =>
+        shiftleft(shiftright(a, i).bitwiseAND(1), 2 * i)
+          .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(1), 2 * i + 1))
+      }.reduce((x, y) => x.bitwiseOR(y))
     df.crossJoin(broadcast(stats))
       .withColumn("__z", interleave(
         bin(col(colA), col("__amin"), col("__amax")),

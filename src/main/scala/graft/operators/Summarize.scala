@@ -16,45 +16,37 @@ object Summarize {
   def words(text: Column): Column =
     array_remove(split(text, "\\s+"), "")
 
-  /** Extractive "sentences": the first `n` groups of `width` words.
-    * Stands in for M1's LLM bullet summary — deterministic and
-    * engine-reproducible.
-    */
-  def sentenceSlices(text: Column, n: Int, width: Int): Column =
-    // bind the split once: it is referenced n times below, and Catalyst
-    // re-evaluates un-bound subtrees per use site
-    graft.functions.Vectors.bound(words(text)) { w =>
-      array((0 until n).map(i =>
-        concat_ws(" ", slice(w, i * width + 1, width))): _*)
-    }
-
   /** M1 stand-in raw model output: boilerplate intro line + one bullet
-    * ("• ") per extracted sentence — the exact shape clean_summary
-    * (F6) is built to strip.
+    * ("• ") per extracted "sentence", the first `n` groups of `width`
+    * words — the exact shape clean_summary (F6) is built to strip.
+    * Deterministic and engine-reproducible.
     */
-  def extractiveSummaryRaw(text: Column, n: Int = 4, width: Int = 2): Column =
+  def extractiveSummaryRaw(text: Column, n: Int = 4, width: Int = 2): Column = {
+    // the split repeats n times with no lambda between the copies:
+    // codegen's subexpression elimination evaluates it once, provided
+    // no CodegenFallback (a HOF, say) takes this column as an argument
+    val w = words(text)
     concat(lit("Here are the main points:\n"),
       concat_ws("\n", (0 until n).map(i =>
-        concat(lit("• "),
-          element_at(sentenceSlices(text, n, width), i + 1))): _*))
+        concat(lit("• "), concat_ws(" ", slice(w, i * width + 1, width)))): _*))
+  }
 
-  /** G5 stand-in: explode a text into fixed-width word-group
-    * "statements" — one row per statement, like the reference's
-    * LLM-extracted statement list (validation_utils.py:92-117).
+  /** G5 stand-in: split a [[words]] array into fixed-width word-group
+    * "statements" — one element per statement, like the reference's
+    * LLM-extracted statement list (validation_utils.py:92-117). `w` is
+    * read inside the per-statement lambda: pass a column staged by a
+    * `select`, or the text is re-split per statement (O(words²) per
+    * doc).
     */
-  def statements(text: Column, width: Int = 6): Column =
-    // bind the split once — `w` is referenced by the count AND inside
-    // the transform lambda, where an un-bound subtree re-splits the
-    // text per statement (O(words²) per doc)
-    graft.functions.Vectors.bound(words(text)) { w =>
-      val n = ceil(size(w) / lit(width.toDouble)).cast("int")
-      // guard n=0: Spark's sequence(0, -1) yields a DESCENDING [0, -1],
-      // not an empty array — an empty text would emit phantom statements
-      when(n > 0,
-        transform(sequence(lit(0), n - 1), i =>
-          concat_ws(" ", slice(w, i * width + 1, lit(width)))))
-        .otherwise(array().cast("array<string>"))
-    }
+  def statements(w: Column, width: Int = 6): Column = {
+    val n = ceil(size(w) / lit(width.toDouble)).cast("int")
+    // guard n=0: Spark's sequence(0, -1) yields a DESCENDING [0, -1],
+    // not an empty array — an empty text would emit phantom statements
+    when(n > 0,
+      transform(sequence(lit(0), n - 1), i =>
+        concat_ws(" ", slice(w, i * width + 1, lit(width)))))
+      .otherwise(array().cast("array<string>"))
+  }
 
   /** Rule-based statement status (deterministic classifier stand-in):
     * confirmed ≻ refuted ≻ unverified, first match wins.

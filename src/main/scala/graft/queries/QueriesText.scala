@@ -379,8 +379,9 @@ private[queries] trait QueriesText { this: Queries.type =>
   private[queries] def q37(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val stmts = t(s, dir, "documents")
+      .select($"doc_id", Summarize.words($"text").as("w"))
       .select($"doc_id",
-        explode(Summarize.statements($"text", width = 6)).as("statement"))
+        explode(Summarize.statements($"w", width = 6)).as("statement"))
       .withColumn("status", Summarize.statementStatus($"statement"))
     Summarize.scorecard(stmts, "doc_id", "status")
       .orderBy($"doc_id")

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Retrieval}
 
 /** Dedup family: exact, MinHash+LSH, SimHash, n-gram Jaccard. */
 class DedupSpec extends AnyFunSuite {
@@ -18,7 +18,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("shingles: distinct 3-grams, short text → empty") {
     val out = Seq("a b c d", "a b").toDF("t")
-      .select(Dedup.shingles($"t").as("s")).collect()
+      .select(Dedup.shingles(Retrieval.tokens($"t")).as("s")).collect()
     assert(out(0).getSeq[String](0).toSet == Set("a b c", "b c d"))
     assert(out(1).getSeq[String](0).isEmpty)
   }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expressions.DocHash
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Retrieval, Similarity}
 
 /** The per-document hashing kernels (MinHash minima, hash embedding,
   * md5u32) against independent references: a plain-Scala
@@ -164,9 +164,9 @@ class DocHashSpec extends AnyFunSuite {
     families.foreach { hash =>
       val hashed = hash match {
         case Dedup.Xx64 => df.select($"id",
-          explode(Dedup.shingleHashes($"text")).as("h"))
+          explode(Dedup.shingleHashes(Retrieval.tokens($"text"))).as("h"))
         case Dedup.Md5 => df.select($"id",
-            explode(Dedup.shingles($"text")).as("sgl"))
+            explode(Dedup.shingles(Retrieval.tokens($"text"))).as("sgl"))
           .select($"id", conv(substring(md5($"sgl"), 1, 8), 16, 10)
             .cast("long").as("h"))
       }

@@ -100,4 +100,15 @@ class HarnessSpec extends AnyFunSuite {
       spark.read.parquet("/nonexistent-observe-input").count())
     assert(bad.isLeft)
   }
+
+  test("Observe.entry walks adaptive plans: a fallback above an " +
+    "exchange is named") {
+    import org.apache.spark.sql.functions.{col, collect_list, expr}
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val (out, rec) = Observe.entry(spark, "aqe")(spark.range(100)
+      .groupBy((col("id") % 3).as("k")).agg(collect_list(col("id")).as("ids"))
+      .select(expr("transform(ids, x -> x + 1)")).collect())
+    assert(out.isRight)
+    assert(rec.fallbacks.contains("transform"), rec.fallbacks)
+  }
 }

@@ -46,7 +46,8 @@ class IngestSummarizeSpec extends AnyFunSuite {
   test("statements covers every word exactly once; status rules apply") {
     val df = Seq("the window is open and the stream runs while dup rows wait")
       .toDF("text")
-      .select(explode(Summarize.statements($"text", width = 4)).as("st"))
+      .select(explode(Summarize.statements(Summarize.words($"text"),
+        width = 4)).as("st"))
       .withColumn("status", Summarize.statementStatus($"st"))
     val out = df.collect().map(r => (r.getString(0), r.getString(1)))
     assert(out.length == 3) // 12 words / 4 per statement
@@ -78,7 +79,7 @@ class IngestSummarizeSpec extends AnyFunSuite {
     "(sequence(0,-1) descending-range regression)") {
     val st = Seq("", "   ", null.asInstanceOf[String])
       .toDF("text")
-      .select(explode(Summarize.statements($"text")).as("s"))
+      .select(explode(Summarize.statements(Summarize.words($"text"))).as("s"))
     assert(st.count() == 0)
     val feeds = Seq(("s", "t", "u")).toDF("source", "topic", "url")
     assert(Ingest.explodeEntries(feeds, perFeed = 0, cap = 2).count() == 0)

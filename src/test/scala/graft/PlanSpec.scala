@@ -415,4 +415,82 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("replace("), "loaded table built a chain")
   }
 
+  test("staged token arrays stay out of lambda bodies: no split inside " +
+    "a lambda, one graft_minhash per banded signature") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction,
+      StringSplit}
+    import org.apache.spark.sql.functions.{col, explode}
+    import graft.expressions.MinHashSignature
+    import graft.operators.{Curation, Dedup, Summarize}
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    def exprs(df: DataFrame) =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions)
+    // a split inlined into a lambda re-tokenizes the text per element
+    def noSplitInLambda(name: String, df: DataFrame): Unit = {
+      val inlined = exprs(df).flatMap(_.collect {
+        case lf: LambdaFunction if lf.exists(_.isInstanceOf[StringSplit]) =>
+          lf
+      })
+      assert(inlined.isEmpty,
+        s"$name: split inside a lambda:\n${df.queryExecution.optimizedPlan}")
+    }
+    val spans = Dedup.duplicateSpans(docs, "doc_id", "text", k = 6)
+    Seq(
+      "jaccardPairs" -> Dedup.jaccardPairs(docs, "text", "doc_id"),
+      "simhashSignatures" ->
+        Dedup.simhashSignatures(docs, "text", "doc_id"),
+      "simhashSignatures(Md5)" ->
+        Dedup.simhashSignatures(docs, "text", "doc_id", Dedup.Md5),
+      "duplicateSpans" -> spans,
+      "duplicateSpans(Md5)" ->
+        Dedup.duplicateSpans(docs, "doc_id", "text", 6, Dedup.Md5),
+      "stripDuplicateSpans" ->
+        Dedup.stripDuplicateSpans(docs, "doc_id", "text", spans),
+      "repetitionMetrics" ->
+        Curation.repetitionMetrics(docs, "doc_id", "text"),
+      "decontaminate" -> Curation.decontaminate(docs, "text", "doc_id",
+        docs.limit(3), "text"),
+      "statements" -> docs
+        .select(col("doc_id"), Summarize.words(col("text")).as("w"))
+        .select(col("doc_id"), explode(Summarize.statements(col("w"))))
+    ).foreach { case (name, df) => noSplitInLambda(name, df) }
+    // the serve path's dedup probe, unmaterialized: band keys read the
+    // signature column, so the kernel runs once per doc
+    val banded = Dedup.bandBuckets(
+      Dedup.minhashSignatures(docs, "text", "doc_id"))
+    val kernels = exprs(banded).map(_.collect {
+      case m: MinHashSignature => m }.size).sum
+    assert(kernels == 1,
+      s"graft_minhash x$kernels:\n${banded.queryExecution.optimizedPlan}")
+  }
+
+  test("the summary bullets run codegen'd: no split under a " +
+    "CodegenFallback, one generated split per distinct split") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.debug.codegenString
+    import org.apache.spark.sql.functions.{array_join, col, size}
+    import graft.functions.Text
+    import graft.operators.Summarize
+    // an interpreted (CodegenFallback) parent evaluates each copy of
+    // the words split on its own, outside codegen's CSE
+    Seq("q36_summarize", "q44_lifecycle").foreach { name =>
+      val p = Queries.all(name)(spark, sf).queryExecution.optimizedPlan
+      val under = p.flatMap(_.expressions).flatMap(_.collect {
+        case f: CodegenFallback => f.collect { case s: StringSplit => s }
+      }.flatten)
+      assert(under.isEmpty, s"$name: split under a CodegenFallback:\n$p")
+    }
+    // q36's shape: the words split repeats n times per bullet array and
+    // the array twice; CSE leaves one words split and one line split
+    val bullets = Text.summaryBullets(Text.cleanSummary(
+      Summarize.extractiveSummaryRaw(col("text"))))
+    val df = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), size(bullets), array_join(bullets, " | "))
+    val code = codegenString(df.queryExecution.executedPlan)
+    val splits = "\\.split\\(".r.findAllIn(code).size
+    assert(splits == 2, s"$splits generated split calls:\n$code")
+  }
+
 }

@@ -24,13 +24,6 @@ class VectorSimilaritySpec extends AnyFunSuite {
     assert(out(3).isNullAt(0))
   }
 
-  test("l2Normalize produces unit vectors") {
-    val out = Seq(Array(3f, 4f)).toDF("v")
-      .select(Vectors.norm(Vectors.l2Normalize($"v")).as("n"))
-      .head.getDouble(0)
-    assert(math.abs(out - 1.0) < 1e-12)
-  }
-
   test("isValid rejects wrong-size and all-zero vectors") {
     val df = Seq(Array(1f, 2f, 3f), Array(0f, 0f, 0f), Array(1f, 2f))
       .toDF("v")
