@@ -1,6 +1,9 @@
 #!/usr/bin/env python3
 """Local dev harness mimicking the driver's correctness gate:
 run graft.Verify output parquet vs DuckDB oracle SQL on the same tables.
+An oracle with no output dir (the entry threw in Verify, or a filtered
+Verify run skipped it) and an output dir with no oracle both count as
+failures.
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
 """
 import sys, os, json, math
@@ -27,10 +30,13 @@ def main():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    outputs = {n for n in os.listdir(out_dir)
+               if os.path.isdir(os.path.join(out_dir, n))}
+    for name in sorted(oracle.keys() - outputs):
+        print(f"FAIL {name}: oracle but no output (did it fail in Verify?)")
+        n_fail += 1
+    for name in sorted(outputs):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
-            continue
         try:
             got = con.sql(f"SELECT * FROM '{d}/*.parquet'")
             got_cols = sorted(got.columns)
@@ -44,8 +50,8 @@ def main():
             n_fail += 1
             continue
         if name not in oracle:
-            print(f"----  {name}: rows-only ({len(got_rows)} rows)"
-                  + ("  ** EMPTY **" if not got_rows else ""))
+            print(f"FAIL {name}: output but no oracle ({len(got_rows)} rows)")
+            n_fail += 1
             continue
         try:
             exp = con.sql(oracle[name])

@@ -10,8 +10,7 @@ object Dev {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Harness.session(Harness.cpus)
     args.foreach { name =>
-      val df = SparkEntry.queries.getOrElse(name,
-        SparkEntry.benchOnly(name))(spark, sfDir)
+      val df = graft.queries.Queries.byName(name).plan(spark, sfDir)
       if (sys.env.contains("GRAFT_EXPLAIN")) df.explain("formatted")
       val t0 = System.nanoTime()
       val n = sys.env.get("GRAFT_DUMP") match {

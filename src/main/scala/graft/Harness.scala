@@ -45,13 +45,13 @@ object Harness {
   def selected(name: String): Boolean =
     only.forall(_.exists(name.startsWith))
 
-  /** Every query and bench-only entry in name order (so residual
-    * warmup always lands on the first entry and per-entry numbers stay
-    * comparable across runs), restricted by [[only]].
+  /** Every registered entry in name order (so residual warmup always
+    * lands on the first entry and per-entry numbers stay comparable
+    * across runs), restricted by [[only]].
     */
   def entries: Seq[(String, Entry)] =
-    (SparkEntry.queries.toSeq ++ SparkEntry.benchOnly.toSeq)
-      .sortBy(_._1).filter(p => selected(p._1))
+    graft.queries.Queries.registry.sortBy(_.name)
+      .collect { case e if selected(e.name) => e.name -> e.plan }
 
   /** Post-entry hygiene, on every path, once the entry's result has
     * been consumed: release stranded `iterCut` frames, delete the

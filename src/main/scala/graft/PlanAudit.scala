@@ -7,7 +7,9 @@ package graft
   * a final-frame explain cannot see (signature materializations, index
   * builds, micro-batch sinks) — and report every expression that mixes
   * in `CodegenFallback`, i.e. runs interpreted per row inside
-  * otherwise-codegen stages. Output: one line per query
+  * otherwise-codegen stages. Each entry runs into a `noop` sink, which
+  * computes every output column (a `count()` lets Catalyst prune each
+  * column the row count does not need). Output: one line per query
   * (`name: expr[,expr…]` or `-`), committable as the round's codegen
   * evidence.
   *
@@ -22,7 +24,8 @@ object PlanAudit {
       "/root/testdata/sf0.01")
     val spark = Harness.session(Harness.cpus)
     Harness.entries.foreach { case (name, fn) =>
-      val (out, rec) = Observe.entry(spark, name)(fn(spark, sfDir).count())
+      val (out, rec) = Observe.entry(spark, name)(
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       Harness.afterEntry(spark)
       println(s"[audit] $name: " + out.fold(
         e => s"ERROR ${e.getClass.getSimpleName}",

@@ -15,11 +15,11 @@ object SparkEntry {
     * the same parquet tables. Omitted keys → driver rows-only check.
     * Includes oracles generated from fitted model parameters, so it
     * must be read AFTER running `queries` (as Verify does). */
-  def oracleSql: Map[String, String] = Queries.oraclesWithFitted
+  def oracleSql: Map[String, String] = Queries.oracleSql
 
   /** Timed by Bench but outside the Verify/oracle contract: production
     * fast-path twins whose oracle twins run an engine-neutral hash
-    * (see Queries.benchOnly).
+    * (see Queries.registry).
     */
   def benchOnly: Map[String, (SparkSession, String) => DataFrame] =
     Queries.benchOnly

@@ -64,8 +64,4 @@ object Vectors {
     */
   def isValid(v: Column, dim: Int): Column =
     size(v) === dim && exists(v, x => x =!= 0.0f)
-
-  /** All-zero vector literal of the given dimension. */
-  def zeros(dim: Int): Column =
-    transform(sequence(lit(1), lit(dim)), _ => lit(0.0))
 }

@@ -241,21 +241,6 @@ private[multimodal] trait JpegCodec extends Serializable {
     out.toByteArray
   }
 
-  /** Deterministic id-seeded COLOR JPEG blob. */
-  def syntheticJpegColor(id: Long, width: Int, height: Int): MediaBlob = {
-    val n = ((width + 7) / 8) * ((height + 7) / 8)
-    val planes = Array.fill(3)(new Array[Int](n))
-    var x = id * 6364136223846793005L + 1442695040888963407L
-    (0 until 3).foreach { c =>
-      (0 until n).foreach { i =>
-        x = x * 6364136223846793005L + 1442695040888963407L
-        planes(c)(i) = ((x >>> 56) & 0xff).toInt
-      }
-    }
-    MediaBlob(id, "image",
-      jpegEncodeColor(width, height, planes(0), planes(1), planes(2)))
-  }
-
   /** Deterministic id-seeded grayscale JPEG blob: per-block values
     * from the same LCG family as [[syntheticPng]].
     */
@@ -1855,9 +1840,8 @@ private[multimodal] trait JpegCodec extends Serializable {
 
   /** Deterministic id-seeded PHOTO-LIKE color JPEG: smooth gradients
     * plus a low-frequency sine so the encoded stream carries REAL AC
-    * coefficients (unlike [[syntheticJpegColor]]'s flat blocks) —
-    * the fixture for the AC decode path. StrictMath keeps the pixels
-    * bit-identical across executors.
+    * coefficients — the fixture for the AC decode path. StrictMath
+    * keeps the pixels bit-identical across executors.
     */
   def syntheticJpegPhoto(id: Long, width: Int, height: Int): MediaBlob =
     MediaBlob(id, "image",

@@ -35,67 +35,6 @@ object Multimodal extends Serializable
 
   val Magic: Int = 0x47524d4d // "GRMM"
 
-  // The metadata row types live at the package level (Spark encoders
-  // need static case classes); these aliases keep every existing
-  // `Multimodal.X` reference and import compiling unchanged.
-  type DecodedMeta = graft.multimodal.DecodedMeta
-  val DecodedMeta: graft.multimodal.DecodedMeta.type = graft.multimodal.DecodedMeta
-  type AacMeta = graft.multimodal.AacMeta
-  val AacMeta: graft.multimodal.AacMeta.type = graft.multimodal.AacMeta
-  type DecompressedText = graft.multimodal.DecompressedText
-  val DecompressedText: graft.multimodal.DecompressedText.type = graft.multimodal.DecompressedText
-  type DispatchedMeta = graft.multimodal.DispatchedMeta
-  val DispatchedMeta: graft.multimodal.DispatchedMeta.type = graft.multimodal.DispatchedMeta
-  type FlacMeta = graft.multimodal.FlacMeta
-  val FlacMeta: graft.multimodal.FlacMeta.type = graft.multimodal.FlacMeta
-  type GifMeta = graft.multimodal.GifMeta
-  val GifMeta: graft.multimodal.GifMeta.type = graft.multimodal.GifMeta
-  type GzipText = graft.multimodal.GzipText
-  val GzipText: graft.multimodal.GzipText.type = graft.multimodal.GzipText
-  type Id3Tags = graft.multimodal.Id3Tags
-  val Id3Tags: graft.multimodal.Id3Tags.type = graft.multimodal.Id3Tags
-  type ImageHashBit = graft.multimodal.ImageHashBit
-  val ImageHashBit: graft.multimodal.ImageHashBit.type = graft.multimodal.ImageHashBit
-  type ImageQuality = graft.multimodal.ImageQuality
-  val ImageQuality: graft.multimodal.ImageQuality.type = graft.multimodal.ImageQuality
-  type JpegExif = graft.multimodal.JpegExif
-  val JpegExif: graft.multimodal.JpegExif.type = graft.multimodal.JpegExif
-  type JpegMeta = graft.multimodal.JpegMeta
-  val JpegMeta: graft.multimodal.JpegMeta.type = graft.multimodal.JpegMeta
-  type MediaBlob = graft.multimodal.MediaBlob
-  val MediaBlob: graft.multimodal.MediaBlob.type = graft.multimodal.MediaBlob
-  type Mp3Meta = graft.multimodal.Mp3Meta
-  val Mp3Meta: graft.multimodal.Mp3Meta.type = graft.multimodal.Mp3Meta
-  type Mp4Meta = graft.multimodal.Mp4Meta
-  val Mp4Meta: graft.multimodal.Mp4Meta.type = graft.multimodal.Mp4Meta
-  type OggMeta = graft.multimodal.OggMeta
-  val OggMeta: graft.multimodal.OggMeta.type = graft.multimodal.OggMeta
-  type PdfPage = graft.multimodal.PdfPage
-  val PdfPage: graft.multimodal.PdfPage.type = graft.multimodal.PdfPage
-  type PngMeta = graft.multimodal.PngMeta
-  val PngMeta: graft.multimodal.PngMeta.type = graft.multimodal.PngMeta
-  type ResizedFrame = graft.multimodal.ResizedFrame
-  val ResizedFrame: graft.multimodal.ResizedFrame.type = graft.multimodal.ResizedFrame
-  type SceneCut = graft.multimodal.SceneCut
-  val SceneCut: graft.multimodal.SceneCut.type = graft.multimodal.SceneCut
-  type TextBlob = graft.multimodal.TextBlob
-  val TextBlob: graft.multimodal.TextBlob.type = graft.multimodal.TextBlob
-  type TsStream = graft.multimodal.TsStream
-  val TsStream: graft.multimodal.TsStream.type = graft.multimodal.TsStream
-  type VideoFrame = graft.multimodal.VideoFrame
-  val VideoFrame: graft.multimodal.VideoFrame.type = graft.multimodal.VideoFrame
-  type WavMeta = graft.multimodal.WavMeta
-  val WavMeta: graft.multimodal.WavMeta.type = graft.multimodal.WavMeta
-  type WavStats = graft.multimodal.WavStats
-  val WavStats: graft.multimodal.WavStats.type = graft.multimodal.WavStats
-  type WavWindow = graft.multimodal.WavWindow
-  val WavWindow: graft.multimodal.WavWindow.type = graft.multimodal.WavWindow
-  type WebpMeta = graft.multimodal.WebpMeta
-  val WebpMeta: graft.multimodal.WebpMeta.type = graft.multimodal.WebpMeta
-  type Y4mMeta = graft.multimodal.Y4mMeta
-  val Y4mMeta: graft.multimodal.Y4mMeta.type = graft.multimodal.Y4mMeta
-
-
   /** Deterministic fake blob: 12-byte header (magic, width, height big-
     * endian) + pseudo-random payload derived from the id. Stands in for
     * reading real media files; layout is what [[decodeStub]] parses.

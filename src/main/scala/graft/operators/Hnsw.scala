@@ -311,11 +311,10 @@ object Hnsw {
     * null tag) return no rows. One-shot: the index is FILTERED to the
     * batch's shards before the co-location exchange, so a persisted
     * `partitionBy("shard")` index is partition-pruned at the source
-    * and a one-topic batch reads one shard, not the corpus; serving
-    * many batches should [[prepare]] + cache once and call
-    * [[topKTaggedResident]]. `ef <= 0` selects the exhaustive oracle
-    * mode (see [[Graph.searchAll]]): provably ≡ per-tag brute-force
-    * cosine top-k — q129's correctness contract.
+    * and a one-topic batch reads one shard, not the corpus. `ef <= 0`
+    * selects the exhaustive oracle mode (see [[Graph.searchAll]]):
+    * provably ≡ per-tag brute-force cosine top-k — q129's correctness
+    * contract.
     */
   def topKTagged(index: DataFrame, tagMap: DataFrame, queries: DataFrame,
                  idCol: String, vecCol: String, tagCol: String, k: Int,
@@ -325,19 +324,6 @@ object Hnsw {
     serve(prepare(index.filter(col("shard").isin(touched: _*))),
       qRows, k, ef, params, routed = true)
   }
-
-  /** [[topKTagged]] minus the index exchange: `prepared` MUST be
-    * [[prepare]]'s output (cached across batches — untouched shards
-    * are skipped before their graphs are materialized).
-    */
-  def topKTaggedResident(prepared: DataFrame, tagMap: DataFrame,
-                         queries: DataFrame, idCol: String,
-                         vecCol: String, tagCol: String, k: Int,
-                         ef: Int = 128,
-                         params: Params = Params()): DataFrame =
-    serve(prepared,
-      taggedQueryRows(tagMap, queries, idCol, vecCol, tagCol),
-      k, ef, params, routed = true)
 
   /** Tagged append: rebuild ONLY the tags the delta carries. Existing
     * tags keep their shard numbers; NEW tags extend the map with the

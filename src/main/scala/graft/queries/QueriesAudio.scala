@@ -2,17 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.multimodal.MediaBlob
 
 /** Audio-container queries: WAV decode/stats/windows/transcode/
   * normalize/trim, fractional resampling, MP3 and FLAC metadata, and
-  * the heterogeneous audio dispatch — split out of
-  * [[QueriesMultimodal]] when it passed the reviewability bound.
-  *
-  * Definitions only — the registry, oracle map and shared loader
-  * live in [[Queries]]; the self-type gives every family access to
-  * the shared helpers and cross-family fixtures without changing
-  * any call site (mechanical split of the flat registry file; no
-  * behavior change).
+  * the heterogeneous audio dispatch.
   */
 private[queries] trait QueriesAudio { this: Queries.type =>
 
@@ -933,7 +927,7 @@ private[queries] trait QueriesAudio { this: Queries.type =>
           inter(2 * i + 1) = ((id * 13 + i * 7) % 151).toInt - 75
         }
         val mode = if (id % 4 == 1) "midside" else "independent"
-        val b = m.MediaBlob(id, "audio/flac",
+        val b = MediaBlob(id, "audio/flac",
           m.flacEncode(16000, ch, 16, inter, blockSize = 64,
             stereoMode = mode))
         if (id % 11 == 0) b.copy(content = b.content.take(50)) else b
@@ -1001,7 +995,7 @@ private[queries] trait QueriesAudio { this: Queries.type =>
           ((id * 7 + k * 13) % 256).toByte)
         val bytes = m.wavG711Bytes(8000, ch, ulaw = id % 2 == 0,
           payload)
-        m.MediaBlob(id, "audio/wav",
+        MediaBlob(id, "audio/wav",
           if (id % 13 == 0) bytes.take(30) else bytes)
       }
     m.decodeWavStats(blobs).toDF()

@@ -7,25 +7,7 @@ import graft.expressions.DocHash
 import graft.functions.{ColumnPlugins, Text, Vectors}
 import graft.operators._
 
-/** The engine's demonstrable query suite: one entry per operator family
-  * from SURVEY.md §2 (+ the large-scale curation extensions), each with
-  * a DuckDB-runnable oracle where SQL can express the semantics.
-  *
-  * Column names and types are aligned pairwise between the Spark plan
-  * and the oracle SQL — the driver's compare hashes values under sorted
-  * column names. Nondeterministic orderings are always tie-broken by a
-  * unique key; floating aggregates are rounded identically on both
-  * sides (engine-difference ≈1e-15 ≪ rounding granularity).
-  */
-
-/** Deduplication family: exact, MinHash-LSH, SimHash, semantic, substring.
-  *
-  * Definitions only — the registry, oracle map and shared loader
-  * live in [[Queries]]; the self-type gives every family access to
-  * the shared helpers and cross-family fixtures without changing
-  * any call site (mechanical split of the flat registry file; no
-  * behavior change).
-  */
+/** Deduplication family: exact, MinHash-LSH, SimHash, semantic, substring. */
 private[queries] trait QueriesDedup { this: Queries.type =>
 
   // ---------------------------------------------------------------- q21
@@ -396,30 +378,21 @@ private[queries] trait QueriesDedup { this: Queries.type =>
   // first-minimum argmin the NearestCells kernel runs, restricts
   // candidate pairs to shared cells, exact-cosine-verifies, walks the
   // closure, and keeps min-id survivors.
-  private[queries] lazy val ivfDedupModels =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.IvfModel]
-  @volatile private var lastIvfDedupDir: Option[String] = None
+  private[queries] lazy val q120Fitted =
+    new Oracle.Fitted[Similarity.IvfModel](q120SqlFor)
   private[queries] def q120(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = t(s, dir, "embeddings").filter($"vec_id" < 200)
       .select($"vec_id", $"embedding", $"label")
     val emb = base.unionByName(base.filter($"vec_id" < 50)
       .select(($"vec_id" + 10000000L).as("vec_id"), $"embedding", $"label"))
-    val model = ivfDedupModels.getOrElseUpdate(dir,
+    val model = q120Fitted(dir)(
       Similarity.fitIvf(emb, "embedding", nlist = 8))
-    lastIvfDedupDir = Some(dir)
     Similarity.semanticDedupIvf(emb, "vec_id", "embedding",
         threshold = 0.8, model, nprobe = 1)
       .select($"vec_id", $"label".cast("long").as("label"))
       .orderBy($"vec_id")
   }
-
-  /** q120's oracle, generated from the centroids fitted by the LAST
-    * q120 run (None until q120 has run in this JVM — Verify's
-    * run-then-dump order guarantees it has, like q76).
-    */
-  private[queries] def q120SqlNow: Option[String] =
-    lastIvfDedupDir.flatMap(ivfDedupModels.get).map(q120SqlFor)
 
   private[queries] def q120SqlFor(model: Similarity.IvfModel): String = {
     def dd(x: Double) = java.lang.Double.toString(x)

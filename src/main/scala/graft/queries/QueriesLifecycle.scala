@@ -6,25 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{ColumnPlugins, Text, Vectors}
 import graft.operators._
 
-/** The engine's demonstrable query suite: one entry per operator family
-  * from SURVEY.md §2 (+ the large-scale curation extensions), each with
-  * a DuckDB-runnable oracle where SQL can express the semantics.
-  *
-  * Column names and types are aligned pairwise between the Spark plan
-  * and the oracle SQL — the driver's compare hashes values under sorted
-  * column names. Nondeterministic orderings are always tie-broken by a
-  * unique key; floating aggregates are rounded identically on both
-  * sides (engine-difference ≈1e-15 ≪ rounding granularity).
-  */
-
-/** Table lifecycle: upsert/CDC/SCD2, layout, staging, events, seeded ops.
-  *
-  * Definitions only — the registry, oracle map and shared loader
-  * live in [[Queries]]; the self-type gives every family access to
-  * the shared helpers and cross-family fixtures without changing
-  * any call site (mechanical split of the flat registry file; no
-  * behavior change).
-  */
+/** Table lifecycle: upsert/CDC/SCD2, layout, staging, events, seeded ops. */
 private[queries] trait QueriesLifecycle { this: Queries.type =>
 
   // ---------------------------------------------------------------- q07

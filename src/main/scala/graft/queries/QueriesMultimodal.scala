@@ -4,27 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{ColumnPlugins, Text, Vectors}
+import graft.multimodal.MediaBlob
 import graft.operators._
 
-/** The engine's demonstrable query suite: one entry per operator family
-  * from SURVEY.md §2 (+ the large-scale curation extensions), each with
-  * a DuckDB-runnable oracle where SQL can express the semantics.
-  *
-  * Column names and types are aligned pairwise between the Spark plan
-  * and the oracle SQL — the driver's compare hashes values under sorted
-  * column names. Nondeterministic orderings are always tie-broken by a
-  * unique key; floating aggregates are rounded identically on both
-  * sides (engine-difference ≈1e-15 ≪ rounding granularity).
-  */
-
-/** Multimodal codecs: WAV, PNG, Y4M, JPEG, frame plans, dispatch.
-  *
-  * Definitions only — the registry, oracle map and shared loader
-  * live in [[Queries]]; the self-type gives every family access to
-  * the shared helpers and cross-family fixtures without changing
-  * any call site (mechanical split of the flat registry file; no
-  * behavior change).
-  */
+/** Multimodal codecs: WAV, PNG, Y4M, JPEG, frame plans, dispatch. */
 private[queries] trait QueriesMultimodal { this: Queries.type =>
 
   // ---------------------------------------------------------------- q45
@@ -155,7 +138,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
             12 + 2 * (id % 3).toInt, num, den, 1 + (id % 10).toInt)
           if (id % 11 == 0) b.copy(content = b.content.dropRight(10))
           else b
-        }.toDF()).as[m.MediaBlob]
+        }.toDF()).as[MediaBlob]
     val meta = m.decodeY4m(blobs).toDF()
     val sampled = m.sampleFramesY4m(blobs, every = 2)
       .groupBy($"media_id").agg(count(lit(1)).as("sampled_frames"))
@@ -1104,7 +1087,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
         val gz = m.gzipBytes(text.getBytes("UTF-8"))
         val content =
           if (id % 13 == 0) java.util.Arrays.copyOf(gz, 10) else gz
-        m.MediaBlob(id, "application/gzip", content)
+        MediaBlob(id, "application/gzip", content)
       }
     m.decodeGzipText(blobs).toDF()
       .select($"media_id", $"n_chars", $"digest", $"decode_ok")
@@ -1163,7 +1146,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
           if (id % 13 == 0 && v != 4)
             java.util.Arrays.copyOf(enc, keepMagic(v))
           else enc
-        m.MediaBlob(id,
+        MediaBlob(id,
           if (v == 5) "br" else "application/octet-stream", content)
       }
     m.decompressText(blobs).toDF()
@@ -1212,7 +1195,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
             if (id % 11 == 0) { ex(12) = 'X'.toByte; ex(13) = 'X'.toByte }
             ex
           }
-        m.MediaBlob(id, "image/jpeg", content)
+        MediaBlob(id, "image/jpeg", content)
       }
     m.decodeJpegExif(blobs).toDF()
       .select($"media_id", $"orientation", $"big_endian", $"has_exif")
@@ -1247,7 +1230,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
         val full = graft.sources.Warc.synthetic(id, 1 + (id % 4).toInt)
         val content =
           if (id % 13 == 0) java.util.Arrays.copyOf(full, 10) else full
-        m.MediaBlob(id, "application/warc", content)
+        MediaBlob(id, "application/warc", content)
       }
     graft.sources.Warc.records(blobs).toDF()
       .select($"media_id", $"rec_no", $"warc_type", $"target_uri",
@@ -1311,7 +1294,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
             case _ => (("caf\u00e9-" + id + ";") * k)
               .getBytes(StandardCharsets.ISO_8859_1)
           }
-        m.MediaBlob(id, "text/plain", content)
+        MediaBlob(id, "text/plain", content)
       }
     m.decodeTextBlobs(blobs).toDF()
       .select($"media_id", $"encoding", $"has_bom", $"n_chars",
@@ -1451,7 +1434,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
         val content =
           if (id % 13 == 0) java.util.Arrays.copyOf(framed, 10)
           else framed
-        m.MediaBlob(id, "application/warc", content)
+        MediaBlob(id, "application/warc", content)
       }
     graft.sources.Warc.textRecords(blobs).toDF()
       .select($"media_id", $"rec_no", $"warc_type", $"target_uri",
@@ -1526,7 +1509,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
         }
         val bytes = graft.sources.Tar.synthetic(id, dirs ++ files,
           longNameMode = longMode, base256Size = id % 6 == 3)
-        m.MediaBlob(id, "application/x-tar",
+        MediaBlob(id, "application/x-tar",
           if (id % 13 == 0) bytes.take(700) else bytes)
       }
     graft.sources.Tar.entries(blobs).toDF()
@@ -1597,7 +1580,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
         val corrupt: Set[Int] = if (id % 11 == 0) Set(0) else Set.empty
         val bytes = graft.sources.Zip.synthetic(id, members, corrupt,
           zip64 = id % 5 == 4)
-        m.MediaBlob(id, "application/zip",
+        MediaBlob(id, "application/zip",
           if (id % 13 == 0) bytes.take(bytes.length - 30) else bytes)
       }
     graft.sources.Zip.entries(blobs).toDF()
@@ -1658,27 +1641,27 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
             m.syntheticWav(id, rate, 1 + (j % 2).toInt, 16,
               ((j % 50).toInt + 1) * 40)
           case 1 =>
-            m.MediaBlob(id, "application/gzip",
+            MediaBlob(id, "application/gzip",
               m.gzipBytes(s"payload-$id".getBytes("UTF-8")))
           case 2 =>
             val members = (0 until (1 + (j % 3)).toInt).map { k =>
               (s"m$k.txt", s"zip-$id-$k".getBytes("UTF-8"),
                 if (k % 2 == 0) "deflate" else "stored")
             }
-            m.MediaBlob(id, "application/zip",
+            MediaBlob(id, "application/zip",
               graft.sources.Zip.synthetic(id, members,
                 if (id % 11 == 0) Set(0) else Set.empty[Int]))
           case 3 =>
             val files = (0 until (1 + (j % 2)).toInt).map { k =>
               (s"f$k.txt", s"tar-$id-$k".getBytes("UTF-8"))
             }
-            m.MediaBlob(id, "application/x-tar",
+            MediaBlob(id, "application/x-tar",
               graft.sources.Tar.synthetic(id, files))
           case 4 =>
-            m.MediaBlob(id, "application/x-xz",
+            MediaBlob(id, "application/x-xz",
               m.xzBytes(s"xz-payload-$id".getBytes("UTF-8")))
           case _ =>
-            m.MediaBlob(id, "application/x-bzip2",
+            MediaBlob(id, "application/x-bzip2",
               m.bzip2Bytes(s"bz-payload-$id".getBytes("UTF-8")))
         }
         if (id % 9 == 0) {
@@ -1812,7 +1795,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
               val g = ((id * 31 + (x / 5) * 37 + (y / 3) * 53) % 256).toInt
               (0xff << 24) | (g << 16) | (g << 8) | g
             }
-            graft.multimodal.Multimodal.MediaBlob(id, "image/webp",
+            graft.multimodal.MediaBlob(id, "image/webp",
               m.vp8lEncode(w, h, px, subtractGreen = id % 2 == 0,
                 cacheBits = 4, lz77 = true))
         }
@@ -2017,7 +2000,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
       .map { id =>
         val bytes = graft.sources.Warc.syntheticHttp(id, 3,
           gzipFramed = id % 2 == 0)
-        graft.multimodal.Multimodal.MediaBlob(id, "application/warc",
+        graft.multimodal.MediaBlob(id, "application/warc",
           if (id % 13 == 0) bytes.take(40) else bytes)
       }
     graft.sources.Warc.httpRecords(blobs).toDF()
@@ -2179,7 +2162,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
         // same closed-form text either way, so one oracle covers all
         val b = m.syntheticPdf(id, pages, hexStrings = id % 4 == 2,
           objStm = id % 3 == 1)
-        m.MediaBlob(id, "application/pdf",
+        MediaBlob(id, "application/pdf",
           if (id % 11 == 0) b.take(80) else b)
       }
     m.pdfPages(blobs).toDF()
@@ -2237,7 +2220,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
             line = k =>
               if (k % 3 == 0) s"sub-$id-$k-a\nsub-$id-$k-b"
               else s"sub-$id-$k")
-        m.MediaBlob(id, if (id % 2 == 1) "text/vtt" else "text/srt", b)
+        MediaBlob(id, if (id % 2 == 1) "text/vtt" else "text/srt", b)
       }
     graft.sources.Subtitles.cues(blobs).toDF()
       .select($"media_id", $"cue_no", $"start_ms", $"end_ms", $"text",
@@ -2292,7 +2275,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
           (0 until (2 + ((id + c) % 4)).toInt).map(j => s"ep-$id-$c-w$j")
         }
         val b = graft.sources.Epub.synthetic(id, chapters)
-        m.MediaBlob(id, "application/epub+zip",
+        MediaBlob(id, "application/epub+zip",
           if (id % 13 == 0) b.take(b.length / 3) else b)
       }
     graft.sources.Epub.chapters(blobs).toDF()
@@ -2348,7 +2331,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
           else graft.sources.Docx.synthetic(id,
             (0 until (1 + (id % 4)).toInt).map(p =>
               s"docx-$id-$p <&> tail"))
-        m.MediaBlob(id, "application/vnd.openxmlformats", b)
+        MediaBlob(id, "application/vnd.openxmlformats", b)
       }
     graft.sources.Docx.paragraphRows(blobs).toDF()
       .select($"media_id", $"para_no", $"n_chars", $"text", $"ok")
@@ -2407,7 +2390,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
             }
             m.bmpEncode(w, h, rgb, topDown = v == 1)
         }
-        val b = m.MediaBlob(id, "image/bmp", content)
+        val b = MediaBlob(id, "image/bmp", content)
         if (id % 7 == 0) b.copy(content = b.content.take(40)) else b
       }
     m.imageQualityStats(blobs).toDF()
@@ -2475,7 +2458,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
           ptsBase = 90000L + id * 100L,
           ptsDelta = 3000L + (id % 2) * 3L,
           dropVideoCc = id % 11 == 0)
-        m.MediaBlob(id, "video/mp2t",
+        MediaBlob(id, "video/mp2t",
           if (id % 13 == 0) bytes.take(100) else bytes)
       }
     m.tsStreams(blobs).toDF()
@@ -2570,7 +2553,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
               (0 until (1 + (id % 3)).toInt).map(p => s"od-$id-$p"),
               heading = s"oh-$id")
         }
-        m.MediaBlob(id, "application/octet-stream",
+        MediaBlob(id, "application/octet-stream",
           if (id % 13 == 12) Array.tabulate(8)(k => ((id + k) % 7).toByte)
           else b)
       }
@@ -2694,7 +2677,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
           // tiles, padded edges) through the same decompressors —
           // identical pixels, so the oracle is layout-invariant
           tileSize = if (id % 5 == 4) 16 else 0)
-        val b = m.MediaBlob(id, "image/tiff", content)
+        val b = MediaBlob(id, "image/tiff", content)
         if (id % 7 == 0) b.copy(content = b.content.take(12)) else b
       }
     m.imageQualityStats(blobs).toDF()
@@ -2927,7 +2910,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
           s"docs/s${id}_$j.txt" -> c
         }
         val bytes = graft.sources.SevenZip.synthetic(id, dirs ++ files)
-        m.MediaBlob(id, "application/x-7z-compressed",
+        MediaBlob(id, "application/x-7z-compressed",
           if (id % 13 == 0) bytes.take(40) else bytes)
       }
     graft.sources.SevenZip.entries(blobs).toDF()
@@ -2993,7 +2976,7 @@ private[queries] trait QueriesMultimodal { this: Queries.type =>
           longNameMode = if (longName) "pax" else "truncate")
         val xz = m.xzBytes(tar)
         if (id % 13 == 0) xz(20) = (xz(20) ^ 0x40).toByte
-        m.MediaBlob(id, "application/x-xz", xz)
+        MediaBlob(id, "application/x-xz", xz)
       }
     blobs.mapPartitions(_.flatMap { b =>
       m.unxz(b.content) match {

@@ -6,25 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{ColumnPlugins, Text, Vectors}
 import graft.operators._
 
-/** The engine's demonstrable query suite: one entry per operator family
-  * from SURVEY.md §2 (+ the large-scale curation extensions), each with
-  * a DuckDB-runnable oracle where SQL can express the semantics.
-  *
-  * Column names and types are aligned pairwise between the Spark plan
-  * and the oracle SQL — the driver's compare hashes values under sorted
-  * column names. Nondeterministic orderings are always tie-broken by a
-  * unique key; floating aggregates are rounded identically on both
-  * sides (engine-difference ≈1e-15 ≪ rounding granularity).
-  */
-
-/** Text functions, ingest, summarize, chunking, tokenization.
-  *
-  * Definitions only — the registry, oracle map and shared loader
-  * live in [[Queries]]; the self-type gives every family access to
-  * the shared helpers and cross-family fixtures without changing
-  * any call site (mechanical split of the flat registry file; no
-  * behavior change).
-  */
+/** Text functions, ingest, summarize, chunking, tokenization. */
 private[queries] trait QueriesText { this: Queries.type =>
 
   // ---------------------------------------------------------------- q16
@@ -838,44 +820,39 @@ private[queries] trait QueriesText { this: Queries.type =>
   // arithmetic (margins, not sigmoids — exp() is not
   // correctly-rounded-guaranteed across engines); the teacher column
   // rides along so the distillation agreement is visible.
-  private[queries] lazy val lrModels =
-    scala.collection.concurrent.TrieMap
-      .empty[String, QualityModel.LrModel]
-  @volatile private var lastLrDir: Option[String] = None
+  private[queries] lazy val q179Fitted =
+    new Oracle.Fitted[QualityModel.LrModel](q179SqlFor)
   private[queries] def q179(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = t(s, dir, "documents")
-    val model = lrModels.getOrElseUpdate(dir,
-      QualityModel.fit(docs, "text"))
-    lastLrDir = Some(dir)
+    val model = q179Fitted(dir)(QualityModel.fit(docs, "text"))
     QualityModel.score(model, docs, "doc_id", "text")
       .join(docs.select($"doc_id",
         (TextAnalysis.qualityScore($"text") >= 0.5).as("teacher")),
         Seq("doc_id"))
       .orderBy($"doc_id")
   }
-  private[queries] def q179SqlNow: Option[String] =
-    lastLrDir.flatMap(lrModels.get).map { m =>
-      val stopRe = s"\\b(${TextAnalysis.stopwords.mkString("|")})\\b"
-      val z = QualityModel.marginSql(m, stopRe)
-      s"""SELECT doc_id,
-         | floor(($z) * 1000000.0 + 0.5) / 1000000.0 AS margin,
-         | ($z) >= 0.0 AS kept,
-         | (CASE WHEN toks > 0 THEN
-         |   least(1.0, toks / 100.0) * 0.4
-         |   + least(1.0, stop * 5.0 / toks) * 0.3
-         |   + (dist / toks) * 0.3 ELSE 0.0 END) >= 0.5 AS teacher
-         |FROM (
-         | SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '\\S+')) AS DOUBLE)
-         |   AS toks,
-         |  CAST(len(regexp_extract_all(lower(text), '$stopRe'))
-         |   AS DOUBLE) AS stop,
-         |  CAST(len(list_distinct(regexp_extract_all(text, '\\S+')))
-         |   AS DOUBLE) AS dist
-         | FROM documents)
-         |ORDER BY doc_id""".stripMargin
-    }
+  private[queries] def q179SqlFor(m: QualityModel.LrModel): String = {
+    val stopRe = s"\\b(${TextAnalysis.stopwords.mkString("|")})\\b"
+    val z = QualityModel.marginSql(m, stopRe)
+    s"""SELECT doc_id,
+       | floor(($z) * 1000000.0 + 0.5) / 1000000.0 AS margin,
+       | ($z) >= 0.0 AS kept,
+       | (CASE WHEN toks > 0 THEN
+       |   least(1.0, toks / 100.0) * 0.4
+       |   + least(1.0, stop * 5.0 / toks) * 0.3
+       |   + (dist / toks) * 0.3 ELSE 0.0 END) >= 0.5 AS teacher
+       |FROM (
+       | SELECT doc_id,
+       |  CAST(len(regexp_extract_all(text, '\\S+')) AS DOUBLE)
+       |   AS toks,
+       |  CAST(len(regexp_extract_all(lower(text), '$stopRe'))
+       |   AS DOUBLE) AS stop,
+       |  CAST(len(list_distinct(regexp_extract_all(text, '\\S+')))
+       |   AS DOUBLE) AS dist
+       | FROM documents)
+       |ORDER BY doc_id""".stripMargin
+  }
 
   private[queries] def q173(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

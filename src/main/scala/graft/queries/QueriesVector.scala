@@ -6,25 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{ColumnPlugins, Text, Vectors}
 import graft.operators._
 
-/** The engine's demonstrable query suite: one entry per operator family
-  * from SURVEY.md §2 (+ the large-scale curation extensions), each with
-  * a DuckDB-runnable oracle where SQL can express the semantics.
-  *
-  * Column names and types are aligned pairwise between the Spark plan
-  * and the oracle SQL — the driver's compare hashes values under sorted
-  * column names. Nondeterministic orderings are always tie-broken by a
-  * unique key; floating aggregates are rounded identically on both
-  * sides (engine-difference ≈1e-15 ≪ rounding granularity).
-  */
-
-/** Vector similarity and ANN: brute force, IVF/PQ/SQ8, HNSW, staleness.
-  *
-  * Definitions only — the registry, oracle map and shared loader
-  * live in [[Queries]]; the self-type gives every family access to
-  * the shared helpers and cross-family fixtures without changing
-  * any call site (mechanical split of the flat registry file; no
-  * behavior change).
-  */
+/** Vector similarity and ANN: brute force, IVF/PQ/SQ8, HNSW, staleness. */
 private[queries] trait QueriesVector { this: Queries.type =>
 
   // ---------------------------------------------------------------- q23
@@ -291,15 +273,13 @@ private[queries] trait QueriesVector { this: Queries.type =>
   // tie-break), codeword tables as list literals. Verify dumps
   // oracleSql AFTER running the queries, so the fitted model is always
   // in cache when the SQL is built (ContractSpec pins this wiring).
-  private[queries] lazy val pqModels =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.PqModel]
-  @volatile private var lastPqDir: Option[String] = None
+  private[queries] lazy val q76Fitted =
+    new Oracle.Fitted[Similarity.PqModel](q76SqlFor)
   private[queries] def q76(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = t(s, dir, "embeddings")
-    val model = pqModels.getOrElseUpdate(dir,
+    val model = q76Fitted(dir)(
       Similarity.fitPq(emb, "embedding", m = 8, k = 16))
-    lastPqDir = Some(dir)
     val codes = Similarity.pqEncode(model, emb, "vec_id", "embedding")
     Similarity.pqTopK(model, emb.filter($"vec_id" < 10), codes,
         "vec_id", "embedding", k = 5)
@@ -307,13 +287,6 @@ private[queries] trait QueriesVector { this: Queries.type =>
         round($"sim", 6).as("sim"))
       .orderBy($"q_id", $"rank")
   }
-
-  /** q76's oracle, built from the codebooks fitted by the LAST q76 run
-    * (None until q76 has run in this JVM — Verify's dump order
-    * guarantees it has).
-    */
-  private[queries] def q76SqlNow: Option[String] =
-    lastPqDir.flatMap(pqModels.get).map(q76SqlFor)
 
   private[queries] def q76SqlFor(model: Similarity.PqModel): String = {
     def dd(x: Double) = java.lang.Double.toString(x)
@@ -535,16 +508,14 @@ private[queries] trait QueriesVector { this: Queries.type =>
   // quantile_disc (exact ≡ percentile_approx at accuracy ≥ n), and
   // the fit baseline as a literal from the model. Both engines replay
   // the DECISION — distance, quantile, ratio, flag — end to end.
-  private[queries] lazy val staleModels =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.IvfPqModel]
-  @volatile private var lastStaleDir: Option[String] = None
+  private[queries] lazy val q130Fitted =
+    new Oracle.Fitted[Similarity.IvfPqModel](q130SqlFor)
   private[queries] def q130(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = t(s, dir, "embeddings")
     val base = emb.filter(pmod($"vec_id", lit(4)) =!= 0)
-    val model = staleModels.getOrElseUpdate(dir,
+    val model = q130Fitted(dir)(
       Similarity.fitIvfPq(base, "embedding", nlist = 8, m = 2, k = 16))
-    lastStaleDir = Some(dir)
     // both batches in DOUBLE space so the +2.0 shift is the same
     // arithmetic the oracle's list_transform applies
     val held = emb.filter(pmod($"vec_id", lit(4)) === 0)
@@ -567,8 +538,6 @@ private[queries] trait QueriesVector { this: Queries.type =>
         $"refit_recommended")
       .orderBy($"batch")
   }
-  private[queries] def q130SqlNow: Option[String] =
-    lastStaleDir.flatMap(staleModels.get).map(q130SqlFor)
   private[queries] def q130SqlFor(model: Similarity.IvfPqModel): String = {
     def dd(x: Double) = java.lang.Double.toString(x)
     val (q, fitQ) = model.ivf.fitDistQ.getOrElse(
@@ -610,29 +579,19 @@ private[queries] trait QueriesVector { this: Queries.type =>
   // with the same left-assoc squared-L2 chains + first-minimum
   // argmin, ranks on the bit-identical raw distance, and rounds the
   // reported distance identically.
-  private[queries] lazy val clusterSampleModels =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.IvfModel]
-  @volatile private var lastClusterSampleDir: Option[String] = None
+  private[queries] lazy val q191Fitted =
+    new Oracle.Fitted[Similarity.IvfModel](q191SqlFor)
   private[queries] def q191(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = t(s, dir, "embeddings").filter($"vec_id" < 400)
       .select($"vec_id", $"embedding")
-    val model = clusterSampleModels.getOrElseUpdate(dir,
+    val model = q191Fitted(dir)(
       Similarity.fitIvf(emb, "embedding", nlist = 8))
-    lastClusterSampleDir = Some(dir)
     Curation.clusterSample(emb, "vec_id", "embedding", model,
         perCluster = 5)
       .select($"vec_id", $"cell", $"cell_rank", $"cell_dist")
       .orderBy($"vec_id")
   }
-
-  /** q191's oracle, generated from the centroids fitted by the LAST
-    * q191 run (None until q191 has run in this JVM — Verify's
-    * run-then-dump order guarantees it has, like q76/q120).
-    */
-  private[queries] def q191SqlNow: Option[String] =
-    lastClusterSampleDir.flatMap(clusterSampleModels.get)
-      .map(q191SqlFor)
 
   private[queries] def q191SqlFor(model: Similarity.IvfModel): String = {
     def dd(x: Double) = java.lang.Double.toString(x)

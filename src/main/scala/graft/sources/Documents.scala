@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.Dataset
 import graft.multimodal.Multimodal
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One document-column row: `kind` ∈ {"pdf", "epub", "docx", "odt",
   * "html", "rtf", "md", "zip", ""}; `n_units` counts the format's natural

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.Dataset
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One DOCX paragraph: `text` is the concatenation of the paragraph's
   * `<w:t>` runs (tab elements become '\t', explicit breaks within a

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.Dataset
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One EPUB chapter in spine (reading) order: `href` is the
   * manifest-resolved member path, `text` the chapter's XHTML body

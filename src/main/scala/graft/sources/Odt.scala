@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.Dataset
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One ODT paragraph: `text` concatenates the paragraph's character
   * data with nested spans flattened, `<text:tab/>` as '\t' and

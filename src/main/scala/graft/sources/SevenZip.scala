@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.Dataset
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One 7z archive member: `method` is the first coder's name (lzma2,
   * copy, ...), `digest` = md5 of the DECOMPRESSED bytes (the

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.Dataset
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One subtitle cue: `start_ms`/`end_ms` from the cue's timestamp
   * line, `text` the cue payload lines joined with '\n' (markup left

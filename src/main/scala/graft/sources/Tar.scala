@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.Dataset
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One archive member: `type_flag` ∈ {"file","dir"}; `digest` = md5
   * hex of the member bytes (files only — the downstream dedup key);

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.Dataset
 
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One parsed WARC record: envelope headers + a payload checksum.
   * `digest` is the payload's lowercase-hex MD5 — exchanges move

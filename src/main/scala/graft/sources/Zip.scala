@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.Dataset
 import graft.multimodal.Multimodal
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** One archive member: `method` ∈ {"stored","deflate","other"};
   * `digest` = md5 hex of the DECOMPRESSED member bytes (the

@@ -375,12 +375,12 @@ class BrotliSpec extends AnyFunSuite {
     import spark.implicits._
     val text = "content-encoding: br payload " * 10
     val blobs = Seq(
-      Multimodal.MediaBlob(1L, "br", Multimodal.brotliBytes(
+      graft.multimodal.MediaBlob(1L, "br", Multimodal.brotliBytes(
         text.getBytes("UTF-8"))),
-      Multimodal.MediaBlob(2L, "application/octet-stream",
+      graft.multimodal.MediaBlob(2L, "application/octet-stream",
         Multimodal.gzipBytes("gzipped".getBytes("UTF-8"))),
-      Multimodal.MediaBlob(3L, "br", Array[Byte](1, 2, 3, 4)),
-      Multimodal.MediaBlob(4L, "br", b64(fix_a_q5))).toDS()
+      graft.multimodal.MediaBlob(3L, "br", Array[Byte](1, 2, 3, 4)),
+      graft.multimodal.MediaBlob(4L, "br", b64(fix_a_q5))).toDS()
     val rows = Multimodal.decompressText(blobs).collect()
       .map(r => r.media_id -> r).toMap
     assert(rows(1L).codec == "br" && rows(1L).decode_ok &&

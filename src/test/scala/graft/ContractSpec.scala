@@ -1,62 +1,49 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.Queries
+import graft.queries.{Oracle, Queries}
 
-/** Driver-contract guards: the correctness gate silently skips any
-  * oracle whose key doesn't exactly match a query name, so a typo in
-  * either map downgrades a query to rows-only without failing
-  * anything. Pin the contract instead.
+/** Driver-contract guards over `Queries.registry`: every view the
+  * driver and the harnesses read is derived from it, and every entry
+  * in the Verify contract ends up with an oracle.
   */
 class ContractSpec extends AnyFunSuite {
 
-  test("every oracle key names an existing query") {
-    val orphans = Queries.oracles.keySet -- Queries.all.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
-  }
+  private val fitted = Queries.registry.filter(_.oracle match {
+    case _: Oracle.Fitted[_] => true
+    case _ => false
+  })
 
-  test("only the fitted-model oracles (q76, q120, q130, q179, q191) " +
-    "are absent from the static map") {
-    val rowsOnly = Queries.all.keySet -- Queries.oracles.keySet
-    assert(rowsOnly == Set("q76_pq_ann", "q120_semdedup_ivf",
-      "q130_ann_staleness", "q179_quality_lr", "q191_cluster_sample"),
-      s"unexpected rows-only queries: $rowsOnly")
+  test("the registry derives the driver contract's views") {
+    assert(Queries.all.size == 215)
+    assert(Queries.benchOnly.size == 10)
+    assert(Queries.all.keySet.intersect(Queries.benchOnly.keySet).isEmpty)
+    assert(Queries.byName.size == Queries.registry.size)
+    assert(Harness.entries.map(_._1) ==
+      Queries.registry.map(_.name).sorted.filter(Harness.selected))
+    assert(Queries.streamingQueries == Set("q93_stream_lifecycle",
+      "q100_stream_tumbling", "q107_stream_join", "q108_sessionize",
+      "q111_stream_refinery", "q132_stream_outer_join",
+      "q133_stream_dedup", "q137_stream_full_outer",
+      "q142_stream_right_outer"))
+    assert(fitted.size == 5, fitted.map(_.name))
   }
 
   test("after running q76/q120, the fitted-model oracles exist and " +
     "EVERY query has an oracle (Verify dumps after running — same " +
     "order)") {
-    Queries.all("q76_pq_ann")(SharedSpark.spark, "/root/testdata/sf0.001")
-      .count()
-    Queries.all("q120_semdedup_ivf")(SharedSpark.spark,
-      "/root/testdata/sf0.001").count()
-    Queries.all("q130_ann_staleness")(SharedSpark.spark,
-      "/root/testdata/sf0.001").count()
-    Queries.all("q179_quality_lr")(SharedSpark.spark,
-      "/root/testdata/sf0.001").count()
-    Queries.all("q191_cluster_sample")(SharedSpark.spark,
-      "/root/testdata/sf0.001").count()
-    val withFitted = Queries.oraclesWithFitted
-    assert((Queries.all.keySet -- withFitted.keySet).isEmpty,
-      s"rows-only residue: ${Queries.all.keySet -- withFitted.keySet}")
-    val sql = withFitted("q76_pq_ann")
-    assert(sql.contains("list_position") && sql.contains("embeddings"))
-    val sql120 = withFitted("q120_semdedup_ivf")
-    assert(sql120.contains("list_position") && sql120.contains("list_min"))
-    val sql130 = withFitted("q130_ann_staleness")
-    assert(sql130.contains("quantile_disc") && sql130.contains("list_min"))
-    val sql179 = withFitted("q179_quality_lr")
-    assert(sql179.contains("margin") && sql179.contains("documents"))
-    val sql191 = withFitted("q191_cluster_sample")
-    assert(sql191.contains("list_position") &&
-      sql191.contains("row_number"))
+    fitted.foreach(_.plan(SharedSpark.spark, "/root/testdata/sf0.001")
+      .count())
+    val keys = Queries.oracleSql.keySet
+    assert(keys == Queries.all.keySet,
+      s"rows-only residue: ${Queries.all.keySet -- keys}")
   }
 
   test("query names are well-formed and unique") {
-    val names = Queries.all.keySet
-    assert(names.forall(_.matches("q\\d+_[a-z0-9_]+")),
-      names.filterNot(_.matches("q\\d+_[a-z0-9_]+")).toString)
-    val nums = names.map(_.takeWhile(_ != '_'))
+    val names = Queries.registry.map(_.name)
+    assert(names.forall(_.matches("q\\d+[a-z]?_[a-z0-9_]+")),
+      names.filterNot(_.matches("q\\d+[a-z]?_[a-z0-9_]+")).toString)
+    val nums = names.map(_.takeWhile(_ != '_')).toSet
     assert(nums.size == names.size, "duplicate query numbers")
   }
 
@@ -66,7 +53,7 @@ class ContractSpec extends AnyFunSuite {
       "orders", "lineitem", "events", "documents", "embeddings")
     // smoke guard: every oracle must mention a known table, a VALUES
     // fixture, or a read of a checked-in fixture file (q35/q50)
-    Queries.oracles.foreach { case (name, sql) =>
+    Queries.oracleSql.foreach { case (name, sql) =>
       val lower = sql.toLowerCase
       assert(tables.exists(lower.contains) || lower.contains("values") ||
           lower.contains("'/root/repo/fixtures/"),

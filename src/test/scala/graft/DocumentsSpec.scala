@@ -95,7 +95,7 @@ class DocumentsSpec extends AnyFunSuite {
         case 1 => Epub.synthetic(id, Seq(Seq(s"e$id")))
         case _ => Docx.synthetic(id, Seq(s"d$id"))
       }
-      Multimodal.MediaBlob(id, "application/octet-stream", b)
+      graft.multimodal.MediaBlob(id, "application/octet-stream", b)
     }
     val rows = Documents.docTextDispatch(blobs).collect()
       .sortBy(_.media_id)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Docx
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** DOCX paragraph extraction: writer round-trips across fragmented
   * runs, entity unescaping, tab/break elements, and the failure

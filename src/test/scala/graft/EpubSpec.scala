@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Epub
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** EPUB chapter extraction: writer round-trips in spine order, the
   * container→OPF→manifest→spine walk, href resolution, chrome-tag

@@ -167,11 +167,11 @@ class FlacPcmSpec extends AnyFunSuite {
         inter(2 * i) = ((id * 17 + i * 3) % 201).toInt - 100
         inter(2 * i + 1) = ((id * 13 + i * 7) % 151).toInt - 75
       }
-      Multimodal.MediaBlob(id, "audio/flac",
+      graft.multimodal.MediaBlob(id, "audio/flac",
         Multimodal.flacEncode(16000, 2, 16, inter, blockSize = 64,
           stereoMode = if (id % 2 == 0) "midside" else "independent"))
     }
-    val blobs = (good :+ Multimodal.MediaBlob(9L, "audio/flac",
+    val blobs = (good :+ graft.multimodal.MediaBlob(9L, "audio/flac",
       Array[Byte]('f', 'L', 'a', 'C', 1, 2))).toDS()
     val rows = Multimodal.decodeFlacStats(blobs).collect()
     assert(rows.count(_.decode_ok) == 8) // 4 blobs × 2 channels

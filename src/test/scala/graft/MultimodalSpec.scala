@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
-import graft.multimodal.Multimodal.{DecodedMeta, MediaBlob}
+import graft.multimodal.{DecodedMeta, MediaBlob, TextBlob}
 
 /** Multimodal binary-column plumbing: synthetic blobs, partition-wise
   * decode stub with failure routing, frame plan, per-frame features.
@@ -55,7 +55,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(new String(w.content, 0, 4, "US-ASCII") == "RIFF")
     assert(new String(w.content, 8, 4, "US-ASCII") == "WAVE")
     val m = Multimodal.parseWav(5L, w.content)
-    assert(m == Multimodal.WavMeta(5L, 22050, 2, 16, 1103L * 4,
+    assert(m == graft.multimodal.WavMeta(5L, 22050, 2, 16, 1103L * 4,
       1103L * 4 * 1000 / (22050 * 4), decode_ok = true))
     assert(m.duration_ms == 50L) // 1103 frames at 22050 Hz → 50.02 ms
   }
@@ -97,8 +97,10 @@ class MultimodalSpec extends AnyFunSuite {
       MediaBlob(3L, "audio", Array[Byte](82, 73, 70, 70)) // bare "RIFF"
     ).toDS().repartition(2)
     val out = Multimodal.decodeWav(blobs).collect().sortBy(_.media_id)
-    assert(out(0) == Multimodal.WavMeta(1L, 16000, 1, 16, 1600L, 50L, true))
-    assert(out(1) == Multimodal.WavMeta(2L, 44100, 2, 16, 17640L, 100L, true))
+    assert(out(0) ==
+      graft.multimodal.WavMeta(1L, 16000, 1, 16, 1600L, 50L, true))
+    assert(out(1) ==
+      graft.multimodal.WavMeta(2L, 44100, 2, 16, 17640L, 100L, true))
     assert(!out(2).decode_ok)
   }
 
@@ -111,9 +113,9 @@ class MultimodalSpec extends AnyFunSuite {
     val b = Multimodal.syntheticWavPcm(9L, 16000, 2, samples)
     val st = Multimodal.wavStats(9L, b.content).sortBy(_.channel)
     assert(st.map(_.decode_ok) == Seq(true, true))
-    assert(st(0) == Multimodal.WavStats(9L, 0, 3L, 300, 600L,
+    assert(st(0) == graft.multimodal.WavStats(9L, 0, 3L, 300, 600L,
       100L * 100 + 200L * 200 + 300L * 300, decode_ok = true))
-    assert(st(1) == Multimodal.WavStats(9L, 1, 3L, 32768,
+    assert(st(1) == graft.multimodal.WavStats(9L, 1, 3L, 32768,
       32775L, 32768L * 32768 + 49L, decode_ok = true))
     // the LCG-payload wavs decode through the same path
     val lcg = Multimodal.syntheticWav(3L, 8000, 1, 16, 100)
@@ -122,7 +124,7 @@ class MultimodalSpec extends AnyFunSuite {
       ls.head.decode_ok)
     // truncation and non-16-bit depth: one decode_ok=false row
     assert(Multimodal.wavStats(3L, lcg.content.take(30)) ==
-      Seq(Multimodal.WavStats(3L, -1, -1L, -1, -1L, -1L,
+      Seq(graft.multimodal.WavStats(3L, -1, -1L, -1, -1L, -1L,
         decode_ok = false)))
     val w8 = Multimodal.syntheticWav(4L, 8000, 1, 8, 10)
     assert(!Multimodal.wavStats(4L, w8.content).head.decode_ok)
@@ -147,7 +149,7 @@ class MultimodalSpec extends AnyFunSuite {
     val b = Multimodal.syntheticWavPcm(9L, 16000, 2, samples)
     val w = Multimodal.wavWindows(9L, b.content, winFrames = 2)
     assert(w.map(_.window_no) == Seq(0, 1, 2))
-    assert(w(0) == Multimodal.WavWindow(9L, 0, 0L, 2, 32768,
+    assert(w(0) == graft.multimodal.WavWindow(9L, 0, 0L, 2, 32768,
       100L + 32768 + 200, 100L * 100 + 32768L * 32768 + 200L * 200,
       decode_ok = true))
     assert(w(2).n_frames == 1 && w(2).peak == 13 &&
@@ -160,7 +162,7 @@ class MultimodalSpec extends AnyFunSuite {
       w.map(_.sum_abs).sum == st.map(_.sum_abs).sum)
     // truncation -> one bad row
     assert(Multimodal.wavWindows(9L, b.content.take(30), 2) ==
-      Seq(Multimodal.WavWindow(9L, -1, -1L, -1, -1, -1L, -1L,
+      Seq(graft.multimodal.WavWindow(9L, -1, -1L, -1, -1, -1L, -1L,
         decode_ok = false)))
   }
 
@@ -177,7 +179,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(meta.sample_rate == 8000 && meta.channels == 1 &&
       meta.data_bytes == 4L && meta.decode_ok)
     val st = Multimodal.wavStats(9L, out)
-    assert(st == Seq(Multimodal.WavStats(9L, 0, 2L, 5, 10L, 50L,
+    assert(st == Seq(graft.multimodal.WavStats(9L, 0, 2L, 5, 10L, 50L,
       decode_ok = true)))
     // decimation without mixdown keeps the channels independent:
     // ch0 [10,-3,5,7] -> floorDiv(7,2)=3, floorDiv(12,2)=6
@@ -455,13 +457,13 @@ class MultimodalSpec extends AnyFunSuite {
     for (big <- Seq(true, false); o <- Seq(1, 3, 6, 8)) {
       val ex = Multimodal.withExifOrientation(base, o, big)
       assert(Multimodal.parseJpegExif(5L, ex) ==
-        Multimodal.JpegExif(5L, o, big, has_exif = true), s"$big/$o")
+        graft.multimodal.JpegExif(5L, o, big, has_exif = true), s"$big/$o")
       // the inserted APP1 must not break the existing parse/decode
       assert(Multimodal.parseJpeg(5L, ex).decode_ok)
       assert(Multimodal.decodeJpegBlocks(ex).isDefined)
     }
     assert(Multimodal.parseJpegExif(5L, base) ==
-      Multimodal.JpegExif(5L, -1, big_endian = false, has_exif = false))
+      graft.multimodal.JpegExif(5L, -1, big_endian = false, has_exif = false))
     // corrupt TIFF endian marker inside a present APP1
     val bad = Multimodal.withExifOrientation(base, 6, bigEndian = true)
     bad(12) = 'X'.toByte; bad(13) = 'X'.toByte
@@ -482,14 +484,14 @@ class MultimodalSpec extends AnyFunSuite {
       .map("%02x".format(_)).mkString
     // plain ASCII = valid UTF-8, no BOM
     val a = m.detectAndDecodeText(1L, "hello".getBytes("UTF-8"))
-    assert(a == m.TextBlob(1L, "utf-8", has_bom = false, 5L,
+    assert(a == TextBlob(1L, "utf-8", has_bom = false, 5L,
       md5("hello"), decode_ok = true))
     // multibyte UTF-8 with BOM
     val s1 = "café"
     val b = m.detectAndDecodeText(2L,
       Array[Byte](0xef.toByte, 0xbb.toByte, 0xbf.toByte) ++
         s1.getBytes(StandardCharsets.UTF_8))
-    assert(b == m.TextBlob(2L, "utf-8", has_bom = true, 4L, md5(s1),
+    assert(b == TextBlob(2L, "utf-8", has_bom = true, 4L, md5(s1),
       decode_ok = true))
     // the same text in Latin-1: 0xE9 + ASCII is INVALID UTF-8
     val c = m.detectAndDecodeText(3L,
@@ -523,7 +525,7 @@ class MultimodalSpec extends AnyFunSuite {
       val b = Multimodal.syntheticWebp(7L, w, h, v)
       assert(Multimodal.sniffFormat(b.content) == "webp")
       assert(Multimodal.parseWebp(7L, b.content) ==
-        Multimodal.WebpMeta(7L, v, w, h,
+        graft.multimodal.WebpMeta(7L, v, w, h,
           if (v == "VP8X") 0 else 1, 0L, decode_ok = true))
     }
     // truncated payload: declared chunk size past the buffer
@@ -613,10 +615,10 @@ class MultimodalSpec extends AnyFunSuite {
     val g87 = Multimodal.syntheticGif(1L, 640, 480, v89 = false)
     val g89 = Multimodal.syntheticGif(2L, 13, 7, v89 = true)
     assert(Multimodal.parseGif(1L, g87.content) ==
-      Multimodal.GifMeta(1L, "87a", 640, 480, gct = false, 0, 0,
+      graft.multimodal.GifMeta(1L, "87a", 640, 480, gct = false, 0, 0,
         decode_ok = true))
     assert(Multimodal.parseGif(2L, g89.content) ==
-      Multimodal.GifMeta(2L, "89a", 13, 7, gct = false, 0, 0,
+      graft.multimodal.GifMeta(2L, "89a", 13, 7, gct = false, 0, 0,
         decode_ok = true))
     assert(!Multimodal.parseGif(3L, g87.content.take(12)).decode_ok)
     val badV = g89.content.clone()
@@ -641,14 +643,14 @@ class MultimodalSpec extends AnyFunSuite {
       "avc1")
     assert(Multimodal.sniffFormat(b0.content) == "mp4")
     assert(Multimodal.parseMp4(1L, b0.content) ==
-      Multimodal.Mp4Meta(1L, "isom", 1000, 2500L, 1, 320, 240, "avc1",
+      graft.multimodal.Mp4Meta(1L, "isom", 1000, 2500L, 1, 320, 240, "avc1",
         decode_ok = true))
     // v1 mvhd (64-bit duration) + audio track: dims come from the
     // VIDEO tkhd, track count includes both, duration floors
     val b1 = Multimodal.syntheticMp4(2L, "mp42", 90000, 123456L, 64,
       48, "hvc1", v1 = true, audioTrack = true)
     assert(Multimodal.parseMp4(2L, b1.content) ==
-      Multimodal.Mp4Meta(2L, "mp42", 90000, 123456L * 1000 / 90000, 2,
+      graft.multimodal.Mp4Meta(2L, "mp42", 90000, 123456L * 1000 / 90000, 2,
         64, 48, "hvc1", decode_ok = true))
     // truncation: a declared box size past the buffer is a row
     // property (brand sniffs, decode fails)
@@ -686,7 +688,7 @@ class MultimodalSpec extends AnyFunSuite {
       meta.frames == 4 && meta.fps_num == 30000 && meta.fps_den == 1001)
     // the re-emitted frames are the resize420 planes of frames 0,2,4,6
     val frames = Multimodal.sampleFramesY4m(
-      Seq(Multimodal.MediaBlob(5L, "video", out)).toDS(), 1).collect()
+      Seq(graft.multimodal.MediaBlob(5L, "video", out)).toDS(), 1).collect()
     assert(frames.length == 4 &&
       frames.forall(_.frame.length == 12 * 8 * 3 / 2))
     val direct = Multimodal.resizeFramesY4m(
@@ -710,7 +712,7 @@ class MultimodalSpec extends AnyFunSuite {
     val png = Multimodal.syntheticPng(1L, 20, 10)
     val jpg = Multimodal.syntheticJpegPhoto(2L, 32, 16)
     val y4m = Multimodal.syntheticY4m(3L, 16, 12, 25, 1, 5)
-    val bad = Multimodal.MediaBlob(4L, "mystery", Array[Byte](9, 9, 9))
+    val bad = graft.multimodal.MediaBlob(4L, "mystery", Array[Byte](9, 9, 9))
     val out = Multimodal.dispatchDecode(Multimodal.dispatchTranscode(
         Seq(wav, png, jpg, y4m, bad).toDS(),
         maxEdge = 12, targetRate = 8000, mono = true, every = 2))
@@ -734,7 +736,7 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.syntheticWavPcm(1L, 16000, 2,
         Array[Short](100, 200, 300, 400)),
       Multimodal.syntheticWavPcm(2L, 16000, 1, Array[Short](7, 9)),
-      Multimodal.MediaBlob(3L, "audio", Array[Byte](1, 2, 3))
+      graft.multimodal.MediaBlob(3L, "audio", Array[Byte](1, 2, 3))
     ).toDS()
     val out = Multimodal.decodeWav(
       Multimodal.transcodeWavBlobs(blobs, 8000, mono = true))
@@ -754,7 +756,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(img != null, "ImageIO rejected the synthesized PNG")
     assert(img.getWidth == 21 && img.getHeight == 13)
     val meta = Multimodal.parsePng(7L, b.content)
-    assert(meta == Multimodal.PngMeta(7L, 21, 13, 8, 2,
+    assert(meta == graft.multimodal.PngMeta(7L, 21, 13, 8, 2,
       meta.idat_bytes, true))
     assert(meta.idat_bytes > 0)
   }
@@ -1012,7 +1014,7 @@ class MultimodalSpec extends AnyFunSuite {
       }
     }
     val meta = Multimodal.parseJpeg(7L, b.content)
-    assert(meta == Multimodal.JpegMeta(7L, w, h, 1, 8,
+    assert(meta == graft.multimodal.JpegMeta(7L, w, h, 1, 8,
       meta.entropy_bytes, true))
     assert(meta.entropy_bytes > 0)
   }
@@ -1401,8 +1403,8 @@ class MultimodalSpec extends AnyFunSuite {
     assert(Multimodal.resizeJpeg(
       java.util.Arrays.copyOf(enc, 40), 24).isEmpty)
     val blobs = Seq(
-      Multimodal.MediaBlob(1L, "image", enc),
-      Multimodal.MediaBlob(2L, "image", java.util.Arrays.copyOf(enc, 40))
+      graft.multimodal.MediaBlob(1L, "image", enc),
+      graft.multimodal.MediaBlob(2L, "image", java.util.Arrays.copyOf(enc, 40))
     ).toDS().repartition(2)
     val outB = Multimodal.resizeJpegBlobs(blobs, 24).collect()
       .sortBy(_.media_id)
@@ -1498,9 +1500,9 @@ class MultimodalSpec extends AnyFunSuite {
       val w = Multimodal.syntheticWav(6L, 8000, 1, 16, 400)
       w.copy(content = java.util.Arrays.copyOf(w.content, 30))
     }
-    val garbage = Multimodal.MediaBlob(7L, "blob",
+    val garbage = graft.multimodal.MediaBlob(7L, "blob",
       Array.tabulate[Byte](64)(i => (i * 31).toByte))
-    val empty = Multimodal.MediaBlob(8L, "blob", Array.emptyByteArray)
+    val empty = graft.multimodal.MediaBlob(8L, "blob", Array.emptyByteArray)
     val blobs = Seq(wav, png, jpg, y4m, corrupt, truncWav, garbage,
       empty).toDS().repartition(3)
     val out = Multimodal.dispatchDecode(blobs).collect()
@@ -1813,7 +1815,7 @@ class MultimodalSpec extends AnyFunSuite {
     val a = Multimodal.parseMp3(1L,
       Multimodal.syntheticMp3(1L, "1", 3, 128, 44100, mono = false,
         nFrames = 4).content)
-    assert(a == Multimodal.Mp3Meta(1L, "1", 3, 128, 44100, 2, 0, -1,
+    assert(a == graft.multimodal.Mp3Meta(1L, "1", 3, 128, 44100, 2, 0, -1,
       104L, decode_ok = true))
     // ID3v2 tag skipped by syncsafe size; id3_size excluded from audio
     val b0 = Multimodal.syntheticMp3(2L, "1", 3, 128, 44100,
@@ -1901,7 +1903,7 @@ class MultimodalSpec extends AnyFunSuite {
     "and malformed-stream rejections") {
     val f = Multimodal.parseFlac(1L,
       Multimodal.syntheticFlac(1L, 44100, 2, 16, 441000L).content)
-    assert(f == Multimodal.FlacMeta(1L, 44100, 2, 16, 441000L, 10000L,
+    assert(f == graft.multimodal.FlacMeta(1L, 44100, 2, 16, 441000L, 10000L,
       decode_ok = true))
     // total_samples = 0 means unknown → duration -1, still decodable
     val u = Multimodal.parseFlac(2L,
@@ -1954,7 +1956,7 @@ class MultimodalSpec extends AnyFunSuite {
       val b = Multimodal.syntheticTaggedMp3(1L, "Tïtle", "Ärtist",
         "Albüm", v4, enc)
       val t = Multimodal.parseId3(1L, b.content)
-      assert(t == Multimodal.Id3Tags(1L, if (v4) "2.4" else "2.3",
+      assert(t == graft.multimodal.Id3Tags(1L, if (v4) "2.4" else "2.3",
         "Tïtle", "Ärtist", "Albüm", decode_ok = true),
         s"v4=$v4 enc=$enc got $t")
       // the same bytes still parse as audio: tag skipped by size
@@ -1985,11 +1987,11 @@ class MultimodalSpec extends AnyFunSuite {
     val o = Multimodal.parseOgg(1L,
       Multimodal.syntheticOgg(1L, "opus", 2, 48000, preSkip = 312)
         .content)
-    assert(o == Multimodal.OggMeta(1L, "opus", 2, 48000, 312, -1L,
+    assert(o == graft.multimodal.OggMeta(1L, "opus", 2, 48000, 312, -1L,
       decode_ok = true))
     val v = Multimodal.parseOgg(2L,
       Multimodal.syntheticOgg(2L, "vorbis", 2, 44100).content)
-    assert(v == Multimodal.OggMeta(2L, "vorbis", 2, 44100, -1, -1L,
+    assert(v == graft.multimodal.OggMeta(2L, "vorbis", 2, 44100, -1, -1L,
       decode_ok = true))
     // a page whose first packet is neither: container ok, codec not
     val j = Multimodal.parseOgg(3L,

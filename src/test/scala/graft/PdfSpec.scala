@@ -121,7 +121,7 @@ class PdfSpec extends AnyFunSuite {
     val blobs = spark.range(0, 12).as[Long].map { id =>
       val b = Multimodal.syntheticPdf(id,
         Seq(Seq(s"p0 of $id"), Seq(s"p1 of $id", "tail")))
-      Multimodal.MediaBlob(id, "application/pdf",
+      graft.multimodal.MediaBlob(id, "application/pdf",
         if (id % 5 == 0) b.take(60) else b)
     }
     val rows = Multimodal.pdfPages(blobs).collect()

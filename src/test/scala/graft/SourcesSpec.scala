@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.multimodal.Multimodal
+import graft.multimodal.{MediaBlob, Multimodal}
 import graft.sources.{FileTreeSource, SourcePlugin, Sources}
 
 /** The fetch seam: ingest resolves its raw-content source by name, so
@@ -106,8 +106,8 @@ class SourcesSpec extends AnyFunSuite {
       ("conversion", "http://b",
         text.getBytes(StandardCharsets.ISO_8859_1))))
     val blobs = Seq(
-      m.MediaBlob(9L, "warc", m.gzipBytes(archive)), // gzip-framed
-      m.MediaBlob(10L, "warc", archive))             // raw
+      MediaBlob(9L, "warc", m.gzipBytes(archive)), // gzip-framed
+      MediaBlob(10L, "warc", archive))             // raw
       .toDS()
     val rows = Warc.textRecords(blobs).collect()
       .sortBy(r => (r.media_id, r.rec_no))
@@ -128,11 +128,11 @@ class SourcesSpec extends AnyFunSuite {
     val spark = SharedSpark.spark
     import spark.implicits._
     val blobs = Seq(
-      Multimodal.MediaBlob(1L, "application/warc",
+      graft.multimodal.MediaBlob(1L, "application/warc",
         Warc.syntheticHttp(1L, 3, gzipFramed = false)),
-      Multimodal.MediaBlob(2L, "application/warc",
+      graft.multimodal.MediaBlob(2L, "application/warc",
         Warc.syntheticHttp(2L, 3, gzipFramed = true)),
-      Multimodal.MediaBlob(3L, "application/warc",
+      graft.multimodal.MediaBlob(3L, "application/warc",
         Warc.syntheticHttp(3L, 3, gzipFramed = false).take(40))
     ).toDS()
     val rows = Warc.httpRecords(blobs).collect()
@@ -159,7 +159,7 @@ class SourcesSpec extends AnyFunSuite {
       "http://x/1",
       ("HTTP/1.1 200 OK\r\nContent-Encoding: br\r\n\r\n".getBytes("ISO-8859-1")
         ++ "this is not brotli at all, definitely not".getBytes))))
-    val bad = Warc.httpRecords(Seq(Multimodal.MediaBlob(9L, "w",
+    val bad = Warc.httpRecords(Seq(graft.multimodal.MediaBlob(9L, "w",
       lying)).toDS()).collect()
     assert(bad.length == 1 && !bad.head.ok &&
       bad.head.content_encoding == "br" && bad.head.status == 200)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Subtitles
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** SRT/WebVTT cue parsing: writer round-trips, timestamp grammar
   * variants, VTT metadata/id/settings handling, lenient per-block

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.multimodal.{Multimodal, Vp8Tables}
-import graft.multimodal.Multimodal.{MediaBlob, Vp8MbPlan}
+import graft.multimodal.MediaBlob
+import graft.multimodal.Multimodal.Vp8MbPlan
 
 /** VP8 (lossy WebP) keyframe codec: bool-coder round-trips, the exact
   * integer transform identities, closed-form pixel equality for the

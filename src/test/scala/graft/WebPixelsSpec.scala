@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.multimodal.Multimodal
-import graft.multimodal.Multimodal.MediaBlob
+import graft.multimodal.MediaBlob
 
 /** GIF LZW + first-frame pixel decode and WebP VP8L decode/encode:
   * round-trips against this repo's writers, an independent-encoder
