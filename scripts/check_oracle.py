@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """Local dev harness mimicking the driver's correctness gate:
 run graft.Verify output parquet vs DuckDB oracle SQL on the same tables.
-An oracle with no output dir (the entry threw in Verify, or a filtered
-Verify run skipped it) and an output dir with no oracle both count as
-failures.
+An oracle with no output dir (the entry threw in Verify) and an output
+dir with no oracle both count as failures. A fitted-model entry that
+threw leaves neither; Verify's own exit status reports it.
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
 """
 import sys, os, json, math

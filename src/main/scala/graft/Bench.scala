@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.Queries
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -18,7 +19,7 @@ object Bench {
     } catch { case _: Throwable => () }
     // GRAFT_BENCH_SELFTEST=1 injects a deliberately broken query to
     // prove failures surface as explicit markers, not fake timings
-    val selftest: Seq[(String, Harness.Entry)] =
+    val selftest: Seq[(String, Queries.Plan)] =
       if (sys.env.contains("GRAFT_BENCH_SELFTEST"))
         Seq("zz_selftest_broken" ->
           ((s: SparkSession, _: String) => s.read.parquet("/nonexistent")))
@@ -29,13 +30,13 @@ object Bench {
     // micro-batches but stays OUT of streamingQueries, whose floor
     // subtotal membership is a round-over-round contract) plus the two
     // iterative entries the r18 driver run inflated with them
-    val minOf2: Set[String] = graft.queries.Queries.streamingQueries ++
+    val minOf2: Set[String] = Queries.streamingQueries ++
       Set("q180_stream_frontier", "q179_quality_lr", "q186_weighted_linkrank")
     // one timed execution of one entry: wall seconds of
     // `fn(spark, sfDir).count()`, its shuffle-delta JSON and its
     // iteration / micro-batch phases (an inflated streaming scalar —
     // q180 once read 13.8× — shows which batch ate the time)
-    def runOnce(name: String, fn: Harness.Entry):
+    def runOnce(name: String, fn: Queries.Plan):
         Either[String, (Double, String, Seq[(String, Double)])] = {
       val (out, rec) = Observe.entry(spark, name)(fn(spark, sfDir).count())
       // post-consume hygiene, in all paths (the r18 1.4-1.7× drift
@@ -113,7 +114,7 @@ object Bench {
     // lets round-over-round comparison exclude the floor mechanically
     val streamFloor = results.collect {
       case (k, Right((sec, _)), _)
-        if graft.queries.Queries.streamingQueries(k) => sec
+        if Queries.streamingQueries(k) => sec
     }.sum
     val errs = results.count(_._2.isLeft)
     // The driver captures only the LAST 2000 chars of this program's

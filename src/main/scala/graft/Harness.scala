@@ -2,7 +2,9 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+
+import graft.queries.Queries
 
 /** The core every in-repo harness runs on — Bench, Verify, Dev,
   * PlanAudit and the test suites' `SharedSpark`: one session factory,
@@ -10,8 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so their configs and hygiene cannot drift apart.
   */
 object Harness {
-  type Entry = (SparkSession, String) => DataFrame
-
   /** `SPARK_GRAFT_CPUS`, else every processor this JVM sees. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
     .fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
@@ -49,8 +49,8 @@ object Harness {
     * lands on the first entry and per-entry numbers stay comparable
     * across runs), restricted by [[only]].
     */
-  def entries: Seq[(String, Entry)] =
-    graft.queries.Queries.registry.sortBy(_.name)
+  def entries: Seq[(String, Queries.Plan)] =
+    Queries.registry.sortBy(_.name)
       .collect { case e if selected(e.name) => e.name -> e.plan }
 
   /** Post-entry hygiene, on every path, once the entry's result has

@@ -9,7 +9,7 @@ object SparkEntry {
     Queries.all("q02_enrich_join")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  def queries: Map[String, Queries.Plan] = Queries.all
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → driver rows-only check.
@@ -21,6 +21,6 @@ object SparkEntry {
     * fast-path twins whose oracle twins run an engine-neutral hash
     * (see Queries.registry).
     */
-  def benchOnly: Map[String, (SparkSession, String) => DataFrame] =
+  def benchOnly: Map[String, Queries.Plan] =
     Queries.benchOnly
 }

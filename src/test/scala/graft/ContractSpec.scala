@@ -34,9 +34,21 @@ class ContractSpec extends AnyFunSuite {
     "order)") {
     fitted.foreach(_.plan(SharedSpark.spark, "/root/testdata/sf0.001")
       .count())
-    val keys = Queries.oracleSql.keySet
-    assert(keys == Queries.all.keySet,
-      s"rows-only residue: ${Queries.all.keySet -- keys}")
+    val sql = Queries.oracleSql
+    assert(sql.keySet == Queries.all.keySet,
+      s"rows-only residue: ${Queries.all.keySet -- sql.keySet}")
+    // each fitted entry renders its own SQL: q120 and q191 share a
+    // model type, so only these tokens tell their oracles apart
+    val tokens = Map(
+      "q76_pq_ann" -> Seq("list_position", "embeddings"),
+      "q120_semdedup_ivf" -> Seq("list_position", "list_min", "losers"),
+      "q130_ann_staleness" -> Seq("quantile_disc", "list_min"),
+      "q179_quality_lr" -> Seq("margin", "documents"),
+      "q191_cluster_sample" -> Seq("list_position", "row_number"))
+    assert(tokens.keySet == fitted.map(_.name).toSet)
+    tokens.foreach { case (name, ts) =>
+      assert(ts.forall(sql(name).contains), s"$name oracle lacks $ts")
+    }
   }
 
   test("query names are well-formed and unique") {
